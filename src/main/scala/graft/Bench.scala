@@ -407,7 +407,7 @@ object Bench {
         // fixed quantizers so the loop ALSO maintains the cell-partitioned
         // code list the index-backed serve reads
         val (centDf, book) =
-          graft.operators.Similarity.loadLandedQuantizers(spark, sfDir)
+          graft.operators.Similarity.landedQuantizers(spark, sfDir)
         val t0 = System.nanoTime()
         graft.streaming.StreamHybrid.start(
           stream, s"$tmp/state", s"$tmp/ckpt", compactEvery = 2,
@@ -531,10 +531,10 @@ object Bench {
           val index = graft.streaming.StreamIvfPq.currentIndex(spark, s"$tmp/codes",
             template = throw new IllegalStateException(
               s"no committed code generation under $tmp/codes"),
-            cells = Some(probes.map(_._2).distinct.sorted))
-          graft.operators.Similarity.refinedSearchIndex(
-              vecs, index, queries, 50, 4, 4, 8, 8, cent, book,
-              probesPre = Some(probes))
+            cells = Some(probes.map(_.cellId).distinct.sorted))
+          graft.operators.Similarity.refinedSearchIndex(vecs,
+              graft.operators.Similarity.IvfPqIndex(index, cent, book),
+              queries, 50, 4, 4, probesPre = Some(probes))
             .write.format("noop").mode("overwrite").save()
         }
         val pBefore = probeMed3()
@@ -838,7 +838,7 @@ object Bench {
           finally st.close()
         }
         val (centDf, book) =
-          graft.operators.Similarity.loadLandedQuantizers(spark, sfDir)
+          graft.operators.Similarity.landedQuantizers(spark, sfDir)
         // drive the same corpus in at a given batch size (nFiles batches
         // of rowsIn/nFiles) — the batch-size economics dial: per-batch
         // cost is dozens of bounded jobs, so rows/s should grow with
@@ -965,7 +965,7 @@ object Bench {
         def stream() = spark.readStream.schema(rows.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
         val (centDf, book) =
-          graft.operators.Similarity.loadLandedQuantizers(spark, sfDir)
+          graft.operators.Similarity.landedQuantizers(spark, sfDir)
         def wall(q: => org.apache.spark.sql.streaming.StreamingQuery): Double = {
           val t0 = System.nanoTime(); q.awaitTermination()
           (System.nanoTime() - t0) / 1e9

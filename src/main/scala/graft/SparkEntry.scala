@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.operators.Similarity.{IvfPqSpec, Landed, Seeded, Trained}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -96,21 +97,21 @@ object SparkEntry {
     "sim_topk_ivf"      -> ((s, d) => Similarity.topKCosineIvf(s, d)),
     "sim_topk_pq"       -> ((s, d) => Similarity.topKPq(s, d)),
     "sim_topk_pq_trained" -> ((s, d) => Similarity.topKPqTrained(s, d)),
-    "sim_topk_ivfpq"    -> ((s, d) => Similarity.topKPqIvf(s, d)),
-    "sim_topk_ivfpq_trained" -> ((s, d) => Similarity.topKPqIvfTrained(s, d)),
-    "sim_topk_ivfpq_res" -> ((s, d) => Similarity.topKPqIvfResTrained(s, d)),
-    "sim_topk_ivfpq_res_landed" -> ((s, d) => Similarity.topKPqIvfResLanded(s, d)),
-    "sim_topk_res_refine" -> ((s, d) => Similarity.topKPqIvfResRefined(s, d)),
+    "sim_topk_ivfpq"    -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Seeded))),
+    "sim_topk_ivfpq_trained" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Trained))),
+    "sim_topk_ivfpq_res" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Trained, residual = true))),
+    "sim_topk_ivfpq_res_landed" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed, residual = true))),
+    "sim_topk_res_refine" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed, residual = true), refine = Some(4))),
     "sim_topk_ivfpq_steady" -> ((s, d) => Similarity.topKPqIvfSteady(s, d)),
-    "sim_topk_ivfpq_landed" -> ((s, d) => Similarity.topKPqIvfLanded(s, d)),
-    "sim_topk_ivfpq_landed_scaled" -> ((s, d) => Similarity.topKPqIvfLandedScaled(s, d)),
-    "sim_topk_refine_landed_scaled" -> ((s, d) => Similarity.topKPqIvfRefinedLandedScaled(s, d)),
+    "sim_topk_ivfpq_landed" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed))),
+    "sim_topk_ivfpq_landed_scaled" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed, scaled = true))),
+    "sim_topk_refine_landed_scaled" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed, scaled = true), refine = Some(4))),
     "sim_topk_ivfpq_reshard" -> ((s, d) => graft.streaming.StreamIvfPq.reshardedDocs(s, d)),
     "sim_kmeans_assign" -> (Similarity.kmeansAssignments _),
-    "sim_ann_recall"    -> ((s, d) => Similarity.annRecall(s, d)),
-    "sim_ann_recall_refined" -> ((s, d) => Similarity.annRecallRefined(s, d)),
-    "sim_topk_refine"   -> ((s, d) => Similarity.topKPqIvfRefined(s, d)),
-    "sim_topk_refine_landed" -> ((s, d) => Similarity.topKPqIvfRefinedLanded(s, d)),
+    "sim_ann_recall"    -> ((s, d) => Similarity.annRecall(s, d, IvfPqSpec(Seeded))),
+    "sim_ann_recall_refined" -> ((s, d) => Similarity.annRecall(s, d, IvfPqSpec(Seeded), refine = Some(4))),
+    "sim_topk_refine"   -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Seeded), refine = Some(4))),
+    "sim_topk_refine_landed" -> ((s, d) => Similarity.topKPqIvf(s, d, IvfPqSpec(Landed), refine = Some(4))),
     "sim_knn_graph"     -> ((s, d) => Similarity.knnGraphDocs(s, d)),
     "sim_knn_graph_steady" -> ((s, d) => Similarity.knnGraphSteady(s, d)),
     "sim_density_prune" -> ((s, d) => Similarity.densityPruneDocs(s, d)),
@@ -217,7 +218,7 @@ object SparkEntry {
     "txt_hybrid_rrf"    -> (TextAnalysis.hybridDocs _),
     "txt_curriculum"    -> (TextAnalysis.curriculumDocs _),
     "txt_hybrid_rrf_steady" -> ((s, d) => TextAnalysis.hybridDocsSteady(s, d)),
-    "sim_recall_hybrid_dense" -> ((s, d) => Similarity.hybridDenseRecall(s, d)),
+    "sim_recall_hybrid_dense" -> ((s, d) => Similarity.annRecall(s, d, IvfPqSpec(Landed), k = 50, refine = Some(4), queryIds = Seq(0L))),
     "txt_quality_calibrated" -> ((s, d) => TextAnalysis.calibratedQualityFilter(s, d)),
     "txt_budget_mix"    -> (TextAnalysis.budgetMixDocs _),
     "txt_boilerplate"   -> (TextAnalysis.boilerplateDocs _),
@@ -1426,7 +1427,7 @@ object SparkEntry {
     * corpus-count-derived [[scaledInitExpr]] — DuckDB trains the same
     * ≈√N coarse cells the scaled landed artifacts hold, then runs the
     * same prune+ADC body. Shared PQ book (training is coarse-independent,
-    * the landQuantizersScaled contract). */
+    * the landedQuantizers contract). */
   private def ivfPqScaledOracleSql(m: Int = 8, kc: Int = 16, subDim: Int = 8,
       k: Int = 5, nprobe: Int = 4,
       queryIds: String = "(0, 100, 200, 300, 400)"): String =

@@ -223,6 +223,13 @@ private[functions] object PqBookRef {
       aC.length == bC.length &&
       aC.indices.forall(s => aC(s).length == bC(s).length &&
         aC(s).indices.forall(c => java.util.Arrays.equals(aC(s)(c), bC(s)(c))))
+  /** Fail fast on a codebook subspace with no cells: the kernels read
+    * cell 0 of every subspace (an empty one would surface as an
+    * ArrayIndexOutOfBounds deep inside a task). */
+  def requireCells(ids: Array[Array[Long]],
+      cents: Array[Array[Array[Double]]]): Unit =
+    ids.indices.foreach(s => require(ids(s).nonEmpty && cents(s).nonEmpty,
+      s"PQ codebook subspace $s has no cells"))
   def isVec(dt: DataType): Boolean = dt match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
     case _ => false
@@ -236,7 +243,12 @@ private[functions] object PqBookRef {
   * codes of one vector, evaluated scan-side against a codebook carried as
   * a codegen reference object ([[VectorKernels.pqCodes]] — bit-equivalent
   * to the `array_min(array(struct(‖c‖²−2·e_s·c, cell), …))` literal tree
-  * it replaces). The literal spelling planned m·kc candidate structs with
+  * it replaces, for every non-null embedding). One difference: a NULL
+  * embedding yields NULL codes (null-safe evaluation), where the literal
+  * tree degenerated to the smallest cell id of every subspace (its
+  * all-null distances sorted first, ties to the smaller cell). A
+  * codebook subspace with no cells fails at construction
+  * ([[PqBookRef.requireCells]]). The literal spelling planned m·kc candidate structs with
   * a zip_with-fold dot EACH (m=8, kc=16 → a ~10⁵-char expression tree per
   * encode site): semantically fine, but every materialization re-planned
   * and re-codegen'd that tree — the dominant constant of the PQ entries
@@ -245,6 +257,7 @@ private[functions] object PqBookRef {
 case class PqEncodeCodes(child: Expression, subDim: Int,
     ids: Array[Array[Long]], cents: Array[Array[Array[Double]]])
   extends UnaryExpression {
+  PqBookRef.requireCells(ids, cents)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pq_codes"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -285,6 +298,7 @@ case class PqEncodeCodes(child: Expression, subDim: Int,
 case class PqAssignCell(left: Expression, right: Expression,
     ids: Array[Array[Long]], cents: Array[Array[Array[Double]]])
   extends BinaryExpression {
+  PqBookRef.requireCells(ids, cents)
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_cell"
   override def checkInputDataTypes(): TypeCheckResult =

@@ -12,8 +12,11 @@ import org.apache.spark.sql.types._
   * the d first-moment sums Σ xl, and the d(d+1)/2 upper-triangular pair
   * sums Σ xl·xm, every sum held as a SIGNED 128-BIT integer (hi/lo limb
   * pairs) so the arithmetic is exact for the full lane domain at any row
-  * count — the same value class as the decimal(38,0) sums of the
-  * posexplode formulation this replaces (2^127 ≈ 1.7e38 fits 38 digits).
+  * count. The output type is the decimal(38,0) of the posexplode
+  * formulation this replaces, which holds at most 10^38 − 1 — less than
+  * the 2^127 ≈ 1.7e38 a 128-bit sum can reach — so [[MomentSums.eval]]
+  * fails with a clear error on a sum beyond 38 digits (unreachable at
+  * realistic row counts: micro² products are ≤ 1e12 each).
   * Capacity grows to the longest lane array seen; shorter rows simply
   * contribute to fewer sums (bit-identical to the tail-slice fan-out,
   * whose group (l, m) collected exactly the rows with > m lanes). */
@@ -150,8 +153,13 @@ case class MomentSums(child: Expression,
   override def eval(buf: MomentState): Any = {
     val d = buf.d
     if (d == 0) return new GenericArrayData(Array.empty[Any])
-    def dec(hi: Long, lo: Long): Decimal =
-      Decimal(scala.math.BigDecimal(buf.toBig(hi, lo)), 38, 0)
+    def dec(hi: Long, lo: Long): Decimal = {
+      val v = buf.toBig(hi, lo)
+      if (v.abs.compareTo(MomentSums.MaxDecimal38) > 0)
+        throw new ArithmeticException(
+          s"moment_sums: exact sum $v exceeds decimal(38,0) (38 digits)")
+      Decimal(scala.math.BigDecimal(v), 38, 0)
+    }
     val rows = new Array[Any](d * (d + 1) / 2 + d + 1)
     var r = 0
     var l = 0
@@ -203,4 +211,10 @@ case class MomentSums(child: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MomentSums =
     copy(child = newChildren(0))
+}
+
+object MomentSums {
+  /** The largest magnitude decimal(38,0) holds: 10^38 − 1. */
+  private[functions] val MaxDecimal38: java.math.BigInteger =
+    java.math.BigInteger.TEN.pow(38).subtract(java.math.BigInteger.ONE)
 }

@@ -769,7 +769,7 @@ object Analytics {
   /** Land the daily histogram table PARTITIONED BY day, so a range
     * serve's day filter prunes partitions at the file index — the scan
     * reads only the covered days' files (the landSearchIndex /
-    * landQuantizers landed-artifact discipline). */
+    * landedQuantizers landed-artifact discipline). */
   def landDailyHistograms(events: DataFrame, prefix: String, path: String,
       width: Double = 25.0, bins: Int = 20): Unit =
     dailyValueHistograms(events, width, bins)

@@ -962,7 +962,7 @@ object Dedup extends Logging {
   /** Land-once-then-read of a SemDedup cell table: trains via `train`
     * only when the catalog has no landed copy (first call / fresh
     * catalog), otherwise broadcasts straight off the landed parquet —
-    * the [[graft.operators.Similarity.landQuantizers]] pattern. */
+    * the [[graft.operators.Similarity.landedQuantizers]] pattern. */
   private def ensureSemanticCells(spark: SparkSession, table: String,
       train: => DataFrame): DataFrame = {
     graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
@@ -1056,7 +1056,7 @@ object Dedup extends Logging {
     * |batch|·|cell| — and with the corpus assignment landed bucketed by
     * cell_id the probe side needs no exchange (the
     * [[landNearDupIndex]] discipline; the cells themselves are already
-    * landed by [[graft.operators.Similarity.landQuantizers]]). */
+    * landed by [[graft.operators.Similarity.landedQuantizers]]). */
   def incrementalSemanticNew(corpus: DataFrame, batch: DataFrame,
       centroids: DataFrame, tau: Double = 0.999): DataFrame = {
     // one hierIndex for BOTH assignment passes (corpus + batch): the
@@ -1136,7 +1136,7 @@ object Dedup extends Logging {
 
   /** STEADY-STATE [[incrementalSemanticArrivals]]: the cells come from
     * the corpus dir's LANDED trained-quantizer table
-    * ([[graft.operators.Similarity.loadLandedQuantizers]] — the same
+    * ([[graft.operators.Similarity.landedQuantizers]] — the same
     * k-means artifact the ANN serve path reads), so the timed plan is
     * pure serve: two assignment crosses + the cell-scoped verifies.
     * Same cells, same answer, same oracle as the retrain entry. */

@@ -120,7 +120,7 @@ object GraphRank {
   }
 
   /** STEADY-STATE [[pageRankDocs]]: the graph is rebuilt under the
-    * LANDED trained centroids ([[Similarity.loadLandedQuantizers]]) — no
+    * LANDED trained centroids ([[Similarity.landedQuantizers]]) — no
     * Lloyd's in the plan; the timed cost is the graph build + the five
     * rank iterations, the recurring production scoring pass. Same
     * answer, same oracle as the retrain entry. */
@@ -324,7 +324,7 @@ object GraphRank {
     * catalog tables: `<prefix>_edges` — the directed k-NN edge set under
     * the LANDED trained centroids (nn·|V| rows, two long columns) — and
     * `<prefix>_labels` — the `iters`-round LPA community partition over
-    * it (|V| rows). The [[Similarity.landQuantizers]] pattern applied to
+    * it (|V| rows). The [[Similarity.landedQuantizers]] pattern applied to
     * the graph monitors: k-means + the blocked graph build + the LPA
     * rounds are paid ONCE per (immutable) corpus; every monitor serve
     * afterwards is a metadata-class fold over the landed relations. At

@@ -24,33 +24,51 @@ import graft.sources.Tables
   */
 object Similarity {
 
+  /** How long a failed `main` in [[overlapJobs]] waits for its cancelled
+    * side chain before rethrowing anyway. */
+  private val SideCancelWaitMs = 10000L
+
   /** Overlap two INDEPENDENT driver-side job chains (guide §2.6): `side`
-    * runs on a dedicated thread that explicitly inherits the caller's
-    * job description (a shared ForkJoinPool inherits local properties
-    * nondeterministically — the r17 advisory: bench:<name> attribution
-    * went missing on the overlapped trainer's jobs), `main` runs on the
-    * calling thread, and the side chain is AWAITED even when `main`
-    * throws, so a failure cannot leak a still-submitting orphan chain.
-    * FIFO scheduling back-fills each chain's stage tails with the
-    * other's tasks; results are the same two computations, unchanged. */
+    * runs on a dedicated daemon thread under its own job group, with the
+    * caller's local properties copied at thread start and its job
+    * description set explicitly (a shared ForkJoinPool inherits local
+    * properties nondeterministically — the r17 advisory: bench:<name>
+    * attribution went missing on the overlapped trainer's jobs); `main`
+    * runs on the calling thread. FIFO scheduling back-fills each chain's
+    * stage tails with the other's tasks; results are the same two
+    * computations, unchanged. A side failure is rethrown. If `main`
+    * fails, the side's job group is cancelled and awaited for at most
+    * [[SideCancelWaitMs]] — so a failure does not leave a still-submitting
+    * orphan chain behind, and a side chain hung outside Spark cannot mask
+    * the failure — then `main`'s exception is rethrown, carrying the side's
+    * failure (if any) as suppressed. */
   private[graft] def overlapJobs[A, B](spark: SparkSession)(side: => A)(
       main: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import java.util.concurrent.{CompletableFuture, ExecutionException, TimeUnit, TimeoutException}
     val sc = spark.sparkContext
     val desc = sc.getLocalProperty("spark.job.description")
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(exec)
-    val f = Future { sc.setJobDescription(desc); side }
-    try {
-      val b = main
-      (Await.result(f, Duration.Inf), b)
-    } finally {
-      try { Await.ready(f, Duration.Inf); () }
-      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-      exec.shutdown()
+    val group = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val sideResult = new CompletableFuture[A]()
+    val t = new Thread(() => {
+      sc.setJobGroup(group, desc)
+      try sideResult.complete(side)
+      catch { case e: Throwable => sideResult.completeExceptionally(e) }
+    }, "graft-overlap-side")
+    t.setDaemon(true)
+    t.start()
+    val b = try main catch {
+      case e: Throwable =>
+        sc.cancelJobGroup(group)
+        try sideResult.get(SideCancelWaitMs, TimeUnit.MILLISECONDS)
+        catch {
+          case se: ExecutionException => e.addSuppressed(se.getCause)
+          case _: TimeoutException => ()
+          case _: InterruptedException => Thread.currentThread().interrupt()
+        }
+        throw e
     }
+    try (sideResult.get(), b)
+    catch { case se: ExecutionException => throw se.getCause }
   }
 
   /** The default probe ids — a FIXED literal set, because the operator
@@ -62,10 +80,10 @@ object Similarity {
     * unchanged.) */
   val defaultProbeIds: Seq[Long] = Seq(0L, 100L, 200L, 300L, 400L)
 
-  /** Default probe set: the [[defaultProbeIds]] vectors, as
+  /** Probe set: the `ids` vectors (default [[defaultProbeIds]]), as
     * (query_id, q_emb) — bounded regardless of corpus size. */
-  def defaultQueries(emb: DataFrame): DataFrame =
-    emb.filter(col("vec_id").isin(defaultProbeIds: _*))
+  def defaultQueries(emb: DataFrame, ids: Seq[Long] = defaultProbeIds): DataFrame =
+    emb.filter(col("vec_id").isin(ids: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
   def topKCosine(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
@@ -396,10 +414,8 @@ object Similarity {
     graft.sources.Landing.ensureLanded(spark, s"${prefix}_hidx",
       Seq(s"${prefix}_hlive", s"${prefix}_hgrouped")) { path =>
       val (cl, g) = hierIndex(centroids)
-      cl.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/hlive").saveAsTable(s"${prefix}_hlive")
-      g.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/hgrouped").saveAsTable(s"${prefix}_hgrouped")
+      saveTable(cl, s"${prefix}_hlive", s"$path/hlive")
+      saveTable(g, s"${prefix}_hgrouped", s"$path/hgrouped")
     }
     (spark.table(s"${prefix}_hlive"), spark.table(s"${prefix}_hgrouped"))
   }
@@ -407,8 +423,7 @@ object Similarity {
   /** The landed hier index of the corpus dir's trained quantizers —
     * the pair every per-dir steady serve assigns with. */
   def loadLandedHierIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ensureHierIndex(spark, quantizerPrefix(dir),
-      loadLandedQuantizers(spark, dir)._1)
+    ensureHierIndex(spark, quantizerPrefix(dir), landedQuantizers(spark, dir)._1)
 
   /** The per-VECTOR-SET half of [[ivfAssignHier]]: the two-stage argmax
     * of `emb` against a prebuilt [[hierIndex]] pair. */
@@ -713,6 +728,9 @@ object Similarity {
     topKCosineLsh(emb, col("vec_id").isin(defaultProbeIds: _*), k)
   }
 
+  /** A PQ codebook: (subspace, cell, centroid lanes) rows. */
+  type Book = Seq[(Int, Int, Array[Double])]
+
   /** Product-quantization codebook: `m` subspaces × `kc` centroids of
     * `subDim` lanes each, deterministic from a splitmix64 seed (plan
     * literals, like [[planeVectors]] — public so the oracle embeds the
@@ -721,7 +739,7 @@ object Similarity {
     * the whole encode/score plan oracle-checkable, and the plan shape is
     * identical either way. */
   def pqCodebook(m: Int = 8, kc: Int = 16, subDim: Int = 8,
-      seed: Long = 0xC0DEB00CL): Seq[(Int, Int, Array[Double])] =
+      seed: Long = 0xC0DEB00CL): Book =
     for (s <- 0 until m; c <- 0 until kc) yield (s, c, Array.tabulate(subDim) { l =>
       val h = graft.functions.HashKernels.splitmix64(
         seed ^ (s * 1000003L + c * 1009L + l))
@@ -751,7 +769,7 @@ object Similarity {
   /** The per-sub (cell-id, centroid) arrays of a codebook, cell-sorted —
     * the reference-object payload of the kernel encode below. */
   private def bookArrays(m: Int,
-      book: Seq[(Int, Int, Array[Double])]): (Array[Array[Long]], Array[Array[Array[Double]]]) = {
+      book: Book): (Array[Array[Long]], Array[Array[Array[Double]]]) = {
     val bySub = book.groupBy(_._1)
     val ids = Array.tabulate(m)(s =>
       bySub.getOrElse(s, Seq.empty).map(_._2.toLong).sorted.toArray)
@@ -761,7 +779,7 @@ object Similarity {
   }
 
   def pqEncodeWithBook(emb: DataFrame, m: Int, subDim: Int,
-      book: Seq[(Int, Int, Array[Double])]): DataFrame = {
+      book: Book): DataFrame = {
     // r18: the per-sub argmin is ONE kernel call with the codebook as a
     // codegen reference object ([[graft.functions.PqEncodeCodes]] — same
     // fold order, ‖c‖² precomputed by the same Scala sum, same
@@ -790,7 +808,7 @@ object Similarity {
     * bounded-collect legitimacy class as the centroid literals). Cells
     * that lose all members drop out (standard Lloyd degeneracy). */
   def pqCodebookTrained(emb: DataFrame, m: Int = 8, kc: Int = 16,
-      subDim: Int = 8, initStep: Int = 31, iters: Int = 2): Seq[(Int, Int, Array[Double])] = {
+      subDim: Int = 8, initStep: Int = 31, iters: Int = 2): Book = {
     val subCols = array((0 until m).map(s =>
       slice(col("embedding"), s * subDim + 1, subDim)): _*)
     // every Lloyd iteration folds the full subvector table; persist it so
@@ -844,8 +862,7 @@ object Similarity {
     * corpus, then the identical encode/LUT/score plan as [[topKPq]]. */
   def topKPqTrained(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    topKPqWithBook(emb, defaultQueries(emb), k, m = 8, subDim = 8,
-      pqCodebookTrained(emb))
+    topKPqWithBook(emb, defaultQueries(emb), k, pqCodebookTrained(emb))
   }
 
   /** STEADY-STATE form of [[topKPqTrained]] — the production serve path
@@ -858,11 +875,11 @@ object Similarity {
     * first call (Bench's unmeasured warm-up, Verify's only pass) pays the
     * training. */
   private val trainedBooks =
-    collection.concurrent.TrieMap[String, Seq[(Int, Int, Array[Double])]]()
+    collection.concurrent.TrieMap[String, Book]()
   def topKPqSteady(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
     val book = trainedBooks.getOrElseUpdate(dir, pqCodebookTrained(emb))
-    topKPqWithBook(emb, defaultQueries(emb), k, m = 8, subDim = 8, book)
+    topKPqWithBook(emb, defaultQueries(emb), k, book)
   }
 
   /** PQ/ADC search (Jégou et al., "Product Quantization for Nearest
@@ -879,16 +896,19 @@ object Similarity {
     * exact), ties broken by vec_id inside `topk_by`. */
   def topKPq(emb: DataFrame, queries: DataFrame, k: Int,
       m: Int, kc: Int, subDim: Int): DataFrame =
-    topKPqWithBook(emb, queries, k, m, subDim, pqCodebook(m, kc, subDim))
+    topKPqWithBook(emb, queries, k, pqCodebook(m, kc, subDim))
+
+  /** (m, subDim) of a codebook: its subspace count and sub-vector width. */
+  private def bookShape(b: Book): (Int, Int) = (b.map(_._1).max + 1, b.head._3.length)
 
   /** Per-query ADC look-up table: the subspace dots of `queries` against
     * every book centroid as one nested-array literal expression of
-    * (cell, w) structs (cell carried explicitly so a trained book with
-    * dropped cells stays addressable), exploded row-locally to
-    * (query_id, sub, cell, w) — |Q|·m·kc tiny rows, always broadcast by
-    * callers. Shared by [[topKPqWithBook]] and [[topKPqIvfWith]]. */
-  private def pqLutRows(queries: DataFrame, m: Int, subDim: Int,
-      b: Seq[(Int, Int, Array[Double])]): DataFrame = {
+    * (code, w) structs (the cell id carried explicitly so a trained book
+    * with dropped cells stays addressable), exploded row-locally to
+    * (query_id, sub, code, w) — |Q|·m·kc tiny rows, always broadcast by
+    * callers. Shared by [[topKPqWithBook]] and [[searchIvfPqIndex]]. */
+  private def pqLutRows(queries: DataFrame, b: Book): DataFrame = {
+    val (m, subDim) = bookShape(b)
     val bySub = b.groupBy(_._1).map { case (s, rows) =>
       s -> rows.map(r => (r._2, r._3)).sortBy(_._1)
     }
@@ -902,297 +922,403 @@ object Similarity {
       .toDF("query_id", "sub", "ws")
       .select(col("query_id"), col("sub"), explode(col("ws")).as("cw"))
       .select(col("query_id"), col("sub"),
-        col("cw.cell").as("cell"), col("cw.w").as("w"))
+        col("cw.cell").as("code"), col("cw.w").as("w"))
   }
 
-  def topKPqWithBook(emb: DataFrame, queries: DataFrame, k: Int,
-      m: Int, subDim: Int, b: Seq[(Int, Int, Array[Double])]): DataFrame = {
-    val codes = pqEncodeWithBook(emb, m, subDim, b)
-      .select(col("vec_id"), posexplode(
-        array((0 until m).map(s => col(s"code_$s")): _*)))
-      .toDF("vec_id", "sub", "cell")
-    val scored = codes.join(broadcast(pqLutRows(queries, m, subDim, b)), Seq("sub", "cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(round(sum(col("w")), 6).as("score"))
-    topKCut(scored, k)
-  }
-
-  /** IVF-PQ search — the two quantizers composed the way production ANN
-    * systems ship them (Jégou et al., TPAMI 2011; the FAISS IVFPQ layout —
-    * public): the coarse IVF quantizer prunes the corpus to the `nprobe`
-    * cells nearest each query, and PQ/ADC scores ONLY the surviving
-    * candidates on their m-byte codes. The index side is built the way it
-    * would be LANDED at 100 TB: each vector's m code rows carry its
-    * coarse cell — the inverted-list layout — so query time touches the
-    * corpus embeddings never (scan-side encode happened at build), reads
-    * only (nprobe/|cells|) of the code table via the broadcast probe
-    * equi-join, and pays m LUT adds per candidate. Per-query LUT is
-    * |Q|·m·kc tiny rows, broadcast; the only data-scale exchange is the
-    * (query_id, vec_id, partial-sum) 24-byte aggregation. Scores are
-    * 6-dp rounded before the k-cut (the shared ADC drift rule); recall
-    * rises with nprobe exactly as in [[topKCosineIvf]]. */
-  def topKPqIvf(emb: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-      m: Int, kc: Int, subDim: Int): DataFrame =
-    topKPqIvfWith(emb, queries, k, nprobe, m, subDim,
-      defaultCentroids(emb), pqCodebook(m, kc, subDim))
-
-  /** [[topKPqIvf]] with caller-supplied quantizers — the seam the TRAINED
-    * instantiation ([[topKPqIvfTrained]]: k-means cells + Lloyd's
-    * codebook) shares with the seeded one; the plan is identical either
-    * way, only the literals change. */
-  def topKPqIvfWith(emb: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-      m: Int, subDim: Int, centroids: DataFrame,
-      b: Seq[(Int, Int, Array[Double])]): DataFrame =
-    searchIvfPqIndex(ivfPqIndexRows(emb, m, subDim, centroids, b),
-      queries, k, nprobe, m, subDim, centroids, b)
-
-  /** The inverted-list index rows a production IVF-PQ system LANDS: one
-    * (vec_id, cell_id, sub, code) row per vector per subspace — coarse
-    * assignment + scan-side PQ encode, joined on vec_id. This is the
-    * "index build paid once" half of [[topKPqIvfWith]], split out so the
-    * streaming maintainer ([[graft.streaming.StreamIvfPq]]) can append
-    * per-batch generations of exactly these rows. */
-  def ivfPqIndexRows(emb: DataFrame, m: Int, subDim: Int,
-      centroids: DataFrame, b: Seq[(Int, Int, Array[Double])]): DataFrame = {
-    val cells = ivfAssign(emb, centroids).select("vec_id", "cell_id")
+  /** PQ-encode `emb` scan-side and explode each vector's m codes
+    * row-locally to (vec_id, sub, code) — the corpus side of every ADC
+    * score. */
+  private def codeRows(emb: DataFrame, b: Book): DataFrame = {
+    val (m, subDim) = bookShape(b)
     pqEncodeWithBook(emb, m, subDim, b)
       .select(col("vec_id"), posexplode(
         array((0 until m).map(s => col(s"code_$s")): _*)))
       .toDF("vec_id", "sub", "code")
-      .join(cells, "vec_id")
   }
 
-  /** The probed (query_id, cell_id) assignment, COLLECTED to the driver —
-    * |Q|·nprobe pairs, the same bounded-collect legitimacy class as the
-    * centroid/codebook literals (the query set is small by contract).
-    * Collecting it is what lets [[searchIvfPqIndex]] prune the code-table
-    * SCAN with a literal `cell_id IN (…)` (partition/bucket pruning on a
-    * landed layout) instead of discarding non-probed cells only at the
-    * join, which still reads the whole table. Deterministic: ties break
-    * on (cosine DESC, cell ASC), and the result is sorted. */
-  def collectProbes(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int): Seq[(Long, Long)] = {
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cs").desc, col("cell_id").asc)
-    queries.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("cell_id"),
-        GraftFunctions.cosineSim(col("q_emb"), col("c_emb")).as("cs"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id").cast("long"), col("cell_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-  }
-
-  /** The serve half of [[topKPqIvfWith]]: prune + ADC-score a prebuilt
-    * inverted-list `index` ([[ivfPqIndexRows]] rows — in-memory, a landed
-    * bucketed table ([[ensureIvfPqCodes]]), or the streaming maintainer's
-    * cell-partitioned generations). The probe assignment is COLLECTED
-    * ([[collectProbes]]) so the candidate prune is a literal
-    * `cell_id IN (probed cells)` AT THE SCAN — on a cell-bucketed or
-    * cell-partitioned layout Spark prunes buckets/partitions and the
-    * query physically reads only (nprobe/|cells|) of the code table, the
-    * inverted-list read IVF exists for (IvfPqLayoutSpec pins the pruned
-    * plans) — followed by the broadcast probe join that re-associates
-    * query ids. Per-query LUT is |Q|·m·kc tiny rows, broadcast; the only
-    * data-scale exchange is the (query_id, vec_id, partial-sum)
-    * aggregation. No candidate dedup: index layouts follow the manifested
-    * compaction discipline ([[graft.streaming.Generations]]), so readers
-    * never observe a fold together with its sources. */
-  def searchIvfPqIndex(index: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, m: Int, subDim: Int, centroids: DataFrame,
-      b: Seq[(Int, Int, Array[Double])],
-      probesPre: Option[Seq[(Long, Long)]] = None): DataFrame = {
-    val probePairs = probesPre.getOrElse(collectProbes(queries, centroids, nprobe))
-    val cells = probePairs.map(_._2).distinct.sorted
-    val spark = index.sparkSession
-    import spark.implicits._
-    val probes = probePairs.toDF("query_id", "cell_id")
-    val lutRows = pqLutRows(queries, m, subDim, b)
-      .withColumnRenamed("cell", "code")
-    val cand = index.filter(col("cell_id").isin(cells: _*))
-      .join(broadcast(probes), Seq("cell_id"))
+  def topKPqWithBook(emb: DataFrame, queries: DataFrame, k: Int,
+      b: Book): DataFrame = {
+    val scored = codeRows(emb, b)
+      .join(broadcast(pqLutRows(queries, b)), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("query_id"))
-    val scored = cand
-      .join(broadcast(lutRows), Seq("query_id", "sub", "code"))
       .groupBy("query_id", "vec_id")
       .agg(round(sum(col("w")), 6).as("score"))
     topKCut(scored, k)
   }
 
-  def topKPqIvf(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    topKPqIvf(emb, defaultQueries(emb), k, nprobe = 4, m = 8, kc = 16, subDim = 8)
+  // --------------------------------------------------------------------
+  // IVF-PQ — the two quantizers composed the way production ANN systems
+  // ship them (Jégou et al., "Product Quantization for Nearest Neighbor
+  // Search", TPAMI 2011; the FAISS IVFPQ layout — public): the coarse IVF
+  // quantizer prunes the corpus to the `nprobe` cells nearest each query,
+  // and PQ/ADC scores ONLY the surviving candidates on their m-byte codes.
+  // Every registry variant is one [[IvfPqSpec]] value over ONE path:
+  // [[ensureIvfPq]] yields the index (inverted code list + the coarse
+  // centroids + the PQ book that built it), [[searchIvfPqIndex]] prunes
+  // and ADC-scores it, and [[refinedSearchIndex]] re-ranks a widened ADC
+  // cut on the exact embeddings.
+  // --------------------------------------------------------------------
+
+  /** Where an IVF-PQ index's quantizers come from. */
+  sealed trait QuantSource
+  /** Plan literals: every 37th vector as a cell ([[defaultCentroids]])
+    * and the seeded [[pqCodebook]]. */
+  case object Seeded extends QuantSource
+  /** Trained per call: k-means cells ([[kmeansCentroidsAuto]]) and a
+    * per-subspace Lloyd's book ([[pqCodebookTrained]]). */
+  case object Trained extends QuantSource
+  /** Trained once and LANDED as catalog tables with the cell-bucketed
+    * code list; every later call (and a restarted process on the same
+    * catalog) reads them. */
+  case object Landed extends QuantSource
+
+  /** One IVF-PQ variant: where the quantizers come from, the coarse
+    * sizing, and what PQ encodes.
+    *
+    * `scaled` sizes the coarse quantizer at ≈√N cells ([[scaledInitEvery]])
+    * instead of the k∝N trainer: the textbook balance point (Jégou et al.
+    * §V) holds both per-query terms at O(√N) — probed-list reads
+    * ∝ N/|cells| and centroid scoring ∝ |cells| — and the landed code list
+    * grows its bucket fan-out with the cell count. The PQ book is shared
+    * with the fixed sizing (subspace quantization is coarse-independent).
+    *
+    * `residual` encodes r = e − c(cell(e)) instead of the raw vector
+    * (Jégou et al. §IV.B; the FAISS IVFPQ default): residuals concentrate
+    * near the origin once the coarse quantizer has soaked up the
+    * between-cell variance, so the same book budget cuts quantization
+    * error (spec-measured). The score becomes q·c_probed + Σ_s LUT.
+    *
+    * The values in use are the registry's variants: √N sizing exists as
+    * the landed raw family, and the seeded book encodes raw vectors. */
+  final case class IvfPqSpec(source: QuantSource, scaled: Boolean = false,
+      residual: Boolean = false) {
+    require(!scaled || (source == Landed && !residual),
+      "√N sizing exists as the landed raw family only")
+    require(!residual || source != Seeded,
+      "the seeded codebook encodes raw vectors only")
   }
 
-  /** TWO-STAGE refined ANN serve — the candidate-generation → exact
-    * re-rank pattern production systems ship as a refine wrapper over a
-    * compressed index (Jégou et al., TPAMI 2011 §V.C's reranking with
-    * source coding; public): ADC distances are approximations, so the
-    * serve path widens the IVF-PQ cut to r·k candidates per query and
-    * re-scores JUST those on their exact embeddings, returning the top k
-    * by true cosine. Refined recall at k dominates the unrefined cut
-    * whenever a true neighbor survives the wide cut but ADC mis-ranks it
-    * below k — the standard recall/latency dial (r=1 is the plain
-    * search; r=|cell| candidates is IVF-exact).
-    *
-    * Scale shape: stage 1 is the audited prune+ADC plan; its r·k·|Q|
-    * result is COLLECTED (the probe-set bounded class) so stage 2's
-    * vector fetch is a literal `vec_id IN (…)` AT THE SCAN — parquet
-    * row-group / bucket pruning reads only the candidate vectors, never
-    * a second corpus pass (the whole reason to rerank from a compressed
-    * index at 100 TB: full vectors are touched for |Q|·r·k rows only).
-    * Re-scoring and the final k-cut run over driver-scale constants. */
-  def topKPqIvfRefined(emb: DataFrame, queries: DataFrame, k: Int, r: Int,
-      nprobe: Int, m: Int, subDim: Int, centroids: DataFrame,
-      b: Seq[(Int, Int, Array[Double])]): DataFrame = {
-    val cand = topKPqIvfWith(emb, queries, k * r, nprobe, m, subDim,
-        centroids, b)
+  /** One probed (query, cell) pair; `qc` is the raw q·c dot a residual
+    * score adds (0 for a raw collect). */
+  final case class Probe(queryId: Long, cellId: Long, qc: Double)
+
+  /** An inverted-list IVF-PQ index: `codes` holds one (vec_id, sub, code,
+    * cell_id) row per vector per subspace — in memory, a landed
+    * cell-bucketed table, or a streaming maintainer's cell-partitioned
+    * generations — next to the coarse `centroids` (cell_id, c_emb) and the
+    * PQ `book` that built it; `residual` codes encode e − c(cell). */
+  final case class IvfPqIndex(codes: DataFrame, centroids: DataFrame,
+      book: Book, residual: Boolean = false)
+
+  object IvfPqIndex {
+    /** Build the index over `emb` in memory — the "index build paid once"
+      * half a production system lands, and what the streaming maintainers
+      * ([[graft.streaming.StreamIvfPq]]) append per batch: coarse
+      * assignment (or the residual table) + scan-side PQ encode. */
+    def build(emb: DataFrame, centroids: DataFrame, book: Book,
+        residual: Boolean = false): IvfPqIndex = IvfPqIndex(
+      ivfPqIndexRows(
+        if (residual) residuals(emb, centroids) else ivfAssign(emb, centroids),
+        book),
+      centroids, book, residual)
+  }
+
+  /** The √N sizing, as the trainer's init stride: every `round(√N)`-th
+    * vector seeds a cell, giving ≈ √N seeds (and, on this corpus, ≈ √N
+    * trained cells — Lloyd's drops only emptied cells). Deterministic
+    * from the corpus count and reproduced verbatim by the oracle's
+    * `round(sqrt(count(*)))` scalar subquery — Java's half-up round and
+    * DuckDB's half-away agree on positives. */
+  def scaledInitEvery(n: Long): Int =
+    math.max(2L, math.round(math.sqrt(n.toDouble))).toInt
+
+  /** Coarse-cell RESIDUALS — r = e − c(cell(e)), computed in DOUBLE so
+    * the subtraction is bit-identical cross-engine: (vec_id, cell_id,
+    * embedding), the shape of [[ivfAssign]]'s rows, so every PQ
+    * trainer/encoder consumes it unchanged. */
+  def residuals(emb: DataFrame, centroids: DataFrame): DataFrame =
+    ivfAssign(emb, centroids)
+      .join(broadcast(centroids), "cell_id")
+      .select(col("vec_id"), col("cell_id"),
+        zip_with(col("embedding"), col("c_emb"),
+          (x, c) => x.cast("double") - c.cast("double")).as("embedding"))
+
+  /** The inverted-list rows of an index: `assigned` rows (vec_id, cell_id,
+    * embedding — [[ivfAssign]]'s, or [[residuals]]' for a residual index)
+    * PQ-encoded scan-side, each vector's m code rows carrying its coarse
+    * cell — the inverted-list layout. */
+  private def ivfPqIndexRows(assigned: DataFrame, b: Book): DataFrame =
+    codeRows(assigned.select("vec_id", "embedding"), b)
+      .join(assigned.select("vec_id", "cell_id"), "vec_id")
+
+  /** The probed cells of each query (cosine DESC, cell ASC — the first
+    * `nprobe`), COLLECTED: |Q|·nprobe pairs, the same
+    * bounded-collect class as the centroid/codebook literals (the query
+    * set is small by contract). Collecting them is what lets
+    * [[searchIvfPqIndex]] prune the code-table SCAN with a literal
+    * `cell_id IN (…)` (bucket/partition pruning on a landed layout).
+    * `withDot` carries each probed cell's raw q·c dot — the additive term
+    * of the residual ADC decomposition q·v ≈ q·c + Σ_s q_s·r̂_s — as a
+    * sequential left fold, the oracle's `list_inner_product` order. */
+  def collectProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int,
+      withDot: Boolean = false): Seq[Probe] = {
+    val wProbe = Window.partitionBy("query_id")
+      .orderBy(col("cs").desc, col("cell_id").asc)
+    val qc = if (!withDot) Nil else Seq(aggregate(zip_with(col("q_emb"),
+      col("c_emb"), (x, c) => x.cast("double") * c.cast("double")),
+      lit(0.0d), (a, t) => a + t).as("qc"))
+    queries.crossJoin(broadcast(centroids))
+      .select(Seq(col("query_id"), col("cell_id"),
+        GraftFunctions.cosineSim(col("q_emb"), col("c_emb")).as("cs")) ++ qc: _*)
+      .withColumn("rn", row_number().over(wProbe))
+      .filter(col("rn") <= nprobe)
+      .select(Seq(col("query_id").cast("long"), col("cell_id").cast("long")) ++
+        qc.map(_ => col("qc")): _*)
+      .collect()
+      .map(r => Probe(r.getLong(0), r.getLong(1), if (withDot) r.getDouble(2) else 0.0))
+      .toSeq.sortBy(p => (p.queryId, p.cellId))
+  }
+
+  /** The serve: prune + ADC-score an inverted-list index. The probe
+    * assignment is COLLECTED ([[collectProbes]]) so the candidate prune is
+    * a literal `cell_id IN (probed cells)` AT THE SCAN — on a cell-bucketed
+    * or cell-partitioned layout the query physically reads only
+    * (nprobe/|cells|) of the code table (IvfPqLayoutSpec pins the pruned
+    * plans) — then the broadcast probe join re-associates query ids. The
+    * per-query LUT is |Q|·m·kc tiny rows, broadcast; the only data-scale
+    * exchange is the (query_id, vec_id, partial-sum) aggregation. A
+    * residual index adds the probed cell's q·c to the LUT sum. Scores are
+    * 6-dp rounded before the k-cut (the shared ADC drift rule). No
+    * candidate dedup: index layouts follow the manifested compaction
+    * discipline ([[graft.streaming.Generations]]), so readers never
+    * observe a fold together with its sources. */
+  def searchIvfPqIndex(index: IvfPqIndex, queries: DataFrame, k: Int,
+      nprobe: Int = 4, probesPre: Option[Seq[Probe]] = None): DataFrame = {
+    val probes = probesPre.getOrElse(
+      collectProbes(queries, index.centroids, nprobe, index.residual))
+    val cells = probes.map(_.cellId).distinct.sorted
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    val probeDf =
+      if (index.residual) probes.map(p => (p.queryId, p.cellId, p.qc))
+        .toDF("query_id", "cell_id", "qc")
+      else probes.map(p => (p.queryId, p.cellId)).toDF("query_id", "cell_id")
+    val lutRows = pqLutRows(queries, index.book).withColumnRenamed("cell", "code")
+    val adc = sum(col("w"))
+    val scored = index.codes.filter(col("cell_id").isin(cells: _*))
+      .join(broadcast(probeDf), Seq("cell_id"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .join(broadcast(lutRows), Seq("query_id", "sub", "code"))
+      .groupBy("query_id", "vec_id")
+      .agg(round(if (index.residual) max(col("qc")) + adc else adc, 6).as("score"))
+    topKCut(scored, k)
+  }
+
+  /** TWO-STAGE refined serve — candidate generation → exact re-rank
+    * (Jégou et al. §V.C's reranking with source coding; public): ADC
+    * distances are approximations, so stage 1 widens the pruned ADC cut
+    * to r·k candidates per query and stage 2 re-scores JUST those on
+    * their exact embeddings, returning the top k by true cosine (r·k
+    * spanning the probed cells is IVF-exact). Stage 1's |Q|·r·k result is
+    * COLLECTED (the probe-set bounded class) so the vector fetch is a
+    * literal `vec_id IN (…)` AT THE SCAN — full vectors are touched for
+    * |Q|·r·k rows only, never a second corpus pass. NaN (zero-norm junk
+    * that slipped through the compressed stage) is skipped inside the
+    * aggregate — the [[topKCosine]] contract. */
+  def refinedSearchIndex(emb: DataFrame, index: IvfPqIndex,
+      queries: DataFrame, k: Int, r: Int, nprobe: Int = 4,
+      probesPre: Option[Seq[Probe]] = None): DataFrame = {
+    val cand = searchIvfPqIndex(index, queries, k * r, nprobe, probesPre)
       .select(col("query_id").cast("long"), col("vec_id").cast("long"))
       .collect().map(rw => (rw.getLong(0), rw.getLong(1))).toSeq.sorted
-    refineCandidates(emb, queries, cand, k)
-  }
-
-  /** The exact re-rank half of [[topKPqIvfRefined]], reusable over any
-    * candidate generator (ADC, LSH, a streamed index): fetch the
-    * candidate vectors through a scan-pruning literal id filter,
-    * re-associate query ids via the broadcast (query, cand) pair set,
-    * score with true cosine, and k-cut. NaN (zero-norm junk that slipped
-    * through a compressed-score stage) is skipped inside the aggregate —
-    * the [[topKCosine]] contract. */
-  def refineCandidates(emb: DataFrame, queries: DataFrame,
-      cand: Seq[(Long, Long)], k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val ids = cand.map(_._2).distinct.sorted
-    val candDf = cand.toDF("query_id", "vec_id")
-    val scored = emb.filter(col("vec_id").isin(ids: _*))
-      .join(broadcast(candDf), Seq("vec_id"))
+    val scored = emb.filter(col("vec_id").isin(cand.map(_._2).distinct.sorted: _*))
+      .join(broadcast(cand.toDF("query_id", "vec_id")), Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         GraftFunctions.cosineSim(col("q_emb"), col("embedding")).as("score"))
     topKCut(scored, k)
   }
 
-  /** CORRECTNESS instantiation of the refined serve: the seeded
-    * quantizers of `sim_topk_ivfpq` widened 4× and re-ranked exactly. */
-  def topKPqIvfRefined(spark: SparkSession, dir: String, k: Int = 5,
-      r: Int = 4): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    topKPqIvfRefined(emb, defaultQueries(emb), k, r, nprobe = 4, m = 8,
-      subDim = 8, defaultCentroids(emb), pqCodebook())
+  /** Catalog table-name prefix of a corpus dir's LANDED IVF-PQ artifacts
+    * (`scaled`: the √N-sized family's): MD5 of the dir (same collision
+    * rationale as [[graft.operators.Dedup.steadyIndexPrefix]] — a 31-bit
+    * `String.hashCode` clash between two corpus dirs would silently serve
+    * with the wrong quantizers). */
+  def quantizerPrefix(dir: String, scaled: Boolean = false): String = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    s"ivfpq_quant_${if (scaled) "scaled_" else ""}$md5"
   }
 
-  /** Two-stage refined serve over ANY prebuilt inverted-list `index`
-    * ([[ivfPqIndexRows]] rows — landed bucketed table, streaming
-    * maintainer generations, or in-memory): stage 1 is the pruned
-    * ADC candidate plan widened to r·k, its |Q|·r·k result collected
-    * (the probe-set bounded class), stage 2 the literal-id-pruned exact
-    * re-rank ([[refineCandidates]]). The shared serve half of
-    * [[topKPqIvfRefinedLanded]], the index-backed hybrid dense leg
-    * ([[TextAnalysis.hybridSearchCompressed]]), and the streamed hybrid
-    * serve ([[graft.streaming.StreamHybrid.searchSteady]]). */
-  def refinedSearchIndex(emb: DataFrame, index: DataFrame,
-      queries: DataFrame, k: Int, r: Int, nprobe: Int, m: Int, subDim: Int,
-      centroids: DataFrame, b: Seq[(Int, Int, Array[Double])],
-      probesPre: Option[Seq[(Long, Long)]] = None): DataFrame = {
-    val cand = searchIvfPqIndex(index, queries, k * r, nprobe, m, subDim,
-        centroids, b, probesPre)
-      .select(col("query_id").cast("long"), col("vec_id").cast("long"))
-      .collect().map(rw => (rw.getLong(0), rw.getLong(1))).toSeq.sorted
-    refineCandidates(emb, queries, cand, k)
+  private def saveTable(df: DataFrame, table: String, path: String): Unit =
+    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
+      .option("path", path).saveAsTable(table)
+
+  /** A landed (sub, cell, cv) codebook table, collected to plan literals
+    * (m·kc rows — the bounded-collect class the trainers already use). */
+  private def readBook(spark: SparkSession, table: String): Book =
+    spark.table(table).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .toSeq.sortBy(t => (t._1, t._2))
+
+  private def saveBook(spark: SparkSession, book: Book, table: String,
+      path: String): Unit = {
+    import spark.implicits._
+    saveTable(book.toDF("sub", "cell", "cv"), table, path)
   }
 
-  /** Refined serve FROM THE LANDED ARTIFACTS — stage 1 is
-    * [[topKPqIvfLanded]]'s bucket-pruned candidate plan widened to r·k
-    * (landed trained quantizers, cell-bucketed code table, no training
-    * or encode anywhere), stage 2 the same literal-id-pruned exact
-    * re-rank: the full production read path of a refined compressed
-    * index, restart-durable. Same answer, same oracle class as the
-    * trained refine (training and encode are deterministic). */
-  def topKPqIvfRefinedLanded(spark: SparkSession, dir: String, k: Int = 5,
-      r: Int = 4): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizers(spark, dir)
-    refinedSearchIndex(emb, ensureIvfPqCodes(spark, dir),
-      defaultQueries(emb), k, r, nprobe = 4, m = 8, subDim = 8, centDf, book)
-  }
-
-  /** ANN quality evaluation — recall@k of the IVF-PQ search against the
-    * exact cosine ground truth, per probe query: the operational metric
-    * every ANN deployment monitors (PQ distance is an approximation and
-    * IVF pruning can miss cells; recall is the number that says whether
-    * nprobe/codebook sizing is adequate BEFORE a bad index serves
-    * production traffic). Runs both searches over the same probe set and
-    * counts the overlap.
-    *
-    * Scale shape: the expensive branches are exactly the two audited
-    * search plans (IVF-PQ prune+ADC, exact scan+topk_by) — the overlap
-    * join and per-query counts run over ≤ |Q|·k rows, driver-scale
-    * constants. At 100 TB the exact branch is the cost (that is what
-    * ground truth costs); a deployment runs this on a sampled probe set,
-    * which is exactly the |Q|-bounded shape here. */
-  def annRecall(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    recallAgainstExact(topKPqIvf(spark, dir, k), spark, dir, k)
-
-  /** [[annRecall]] for the REFINED serve ([[topKPqIvfRefined]]) — the
-    * number that shows the refine dial paying for itself: per probe
-    * query, recall can only rise vs the unrefined entry (the wide-cut
-    * dominance argument, spec-pinned), and the monitored pair is what
-    * a deployment tunes r against. */
-  def annRecallRefined(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    recallAgainstExact(
-      topKPqIvfRefined(spark, dir, k), spark, dir, k)
-
-  /** Recall@depth of the INDEX-BACKED hybrid dense leg against the
-    * exact dense leg it replaced — the annRecall monitor for the
-    * hybrid-retrieval dial ([[TextAnalysis.hybridDocsSteady]]'s
-    * approximate branch vs [[TextAnalysis.hybridDocs]]'s exact one,
-    * same probe vector, same depth): the number a deployment reads
-    * before trusting the compressed serve, and tunes (r, nprobe)
-    * against. Scale shape: the ann branch is the audited refined
-    * landed serve; the exact branch is what ground truth costs
-    * (corpus-linear — run on the bounded probe set, as here). */
-  def hybridDenseRecall(spark: SparkSession, dir: String,
-      depth: Int = 50, r: Int = 4): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") === 0L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val (centDf, book) = loadLandedQuantizers(spark, dir)
-    // the exact ground-truth leg (one corpus-linear scan, lazy until an
-    // action) and the ANN leg's eager probe/candidate collects are
-    // independent chains — overlap them (guide §2.6 via [[overlapJobs]];
-    // the r17 verdict ask). The exact leg pins its ≤ depth·|Q|-row cut
-    // (bounded by construction) so the fusion tail reads a materialized
-    // leaf; values are unchanged on both legs.
-    val (exact, ann) = overlapJobs(spark)(
-      topKCosine(emb, queries, depth).select("query_id", "vec_id")
-        .localCheckpoint()) {
-      refinedSearchIndex(emb, ensureIvfPqCodes(spark, dir), queries,
-          depth, r, nprobe = 4, m = 8, subDim = 8, centDf, book)
-        .select("query_id", "vec_id")
+  /** Land-or-load the TRAINED quantizers of a corpus dir and return them:
+    * the coarse centroid table (it joins as a broadcast side — no collect
+    * needed; √N-sized when `scaled`) and the PQ codebook collected to plan
+    * literals. `<prefix>_centroids` (k-means cells) and `<prefix>_codebook`
+    * (per-subspace Lloyd's book) land as ONE artifact — both or neither, so
+    * a land that failed between the writes cannot wedge later serves; the
+    * √N centroids land beside them under the scaled prefix. Both are
+    * bounded-size; a restarted process RELOADS instead of retraining. */
+  def landedQuantizers(spark: SparkSession, dir: String,
+      scaled: Boolean = false): (DataFrame, Book) = {
+    lazy val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+    val p = quantizerPrefix(dir)
+    graft.sources.Landing.ensureLanded(spark, s"${p}_quant",
+      Seq(s"${p}_centroids", s"${p}_codebook")) { path =>
+      saveTable(kmeansCentroidsAuto(emb), s"${p}_centroids", s"$path/centroids")
+      saveBook(spark, pqCodebookTrained(emb), s"${p}_codebook", s"$path/codebook")
     }
-    val overlap = ann.join(exact, Seq("query_id", "vec_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_overlap"))
-    ann.select("query_id").distinct()
-      .join(overlap, Seq("query_id"), "left_outer")
-      .select(col("query_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        round(coalesce(col("n_overlap"), lit(0L)) / lit(depth.toDouble), 6)
-          .as("recall"))
+    val ps = quantizerPrefix(dir, scaled)
+    if (scaled) graft.sources.Landing.ensureLanded(spark, s"${ps}_quant",
+      Seq(s"${ps}_centroids")) { path =>
+      saveTable(kmeansCentroids(emb, initEvery = scaledInitEvery(emb.count())),
+        s"${ps}_centroids", s"$path/centroids")
+    }
+    (spark.table(s"${ps}_centroids"), readBook(spark, s"${p}_codebook"))
   }
 
-  private def recallAgainstExact(ann0: => DataFrame, spark: SparkSession,
-      dir: String, k: Int): DataFrame = {
-    // the exact ground-truth leg and the ANN leg (whose probe/candidate
-    // collects — for the refined form, the whole stage-1 ADC search —
-    // run eagerly at construction) are independent chains: overlap them
-    // (guide §2.6 via [[overlapJobs]]; the r17 verdict ask). The exact
-    // cut pins ≤ k·|Q| rows — bounded by construction.
-    val (exact, ann1) = overlapJobs(spark)(
-      topKCosine(spark, dir, k).select("query_id", "vec_id")
-        .localCheckpoint())(ann0)
-    val ann = ann1.select("query_id", "vec_id")
+  /** The landed index of a [[Landed]] spec: [[landedQuantizers]], then the
+    * inverted code list as a parquet catalog table BUCKETED BY `cell_id` —
+    * each coarse cell's code rows live in a known bucket, so a serve-time
+    * `cell_id IN (probed cells)` prunes buckets and reads ONLY the probed
+    * inverted lists. Per-bucket sort (cell_id, vec_id, sub) keeps each
+    * vector's m code rows adjacent. Fan-out: 16 for the fixed sizing; for
+    * √N sizing one bucket per cell up to 256 — at production cell counts
+    * cap it at table-size/128–256 MiB ([[graft.sources.Layout]]'s rule) and
+    * let consecutive cells share a bucket, so per-query reads stay ∝ √N
+    * without the small-file pathology. A residual spec lands its
+    * residual-trained book with its codes as one artifact (`_res`); its
+    * centroids are the fixed family's. First call on a fresh catalog pays
+    * one encode + bucketed write; every later call reads the tables. */
+  private def landedIndex(spark: SparkSession, dir: String, emb: DataFrame,
+      scaled: Boolean, residual: Boolean): IvfPqIndex = {
+    val (cents, rawBook) = landedQuantizers(spark, dir, scaled)
+    val p = quantizerPrefix(dir, scaled)
+    val codes = if (residual) "res_codes" else "codes"
+    val resBook = s"${p}_res_codebook"
+    graft.sources.Landing.ensureLanded(spark,
+      if (residual) s"${p}_res" else s"${p}_codes",
+      (if (residual) Seq(resBook) else Nil) :+ s"${p}_$codes") { path =>
+      val assigned =
+        if (residual) residuals(emb, cents)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else ivfAssign(emb, cents)
+      val book =
+        if (residual) pqCodebookTrained(assigned.select("vec_id", "embedding"))
+        else rawBook
+      if (residual) saveBook(spark, book, resBook, s"$path/res_codebook")
+      graft.sources.Layout.writeBucketed(ivfPqIndexRows(assigned, book),
+        s"${p}_$codes", Seq("cell_id"), Seq("cell_id", "vec_id", "sub"),
+        if (scaled) math.min(cents.count(), 256L).toInt else 16,
+        s"$path/$codes")
+      assigned.unpersist()
+    }
+    IvfPqIndex(spark.table(s"${p}_$codes"), cents,
+      if (residual) readBook(spark, resBook) else rawBook, residual)
+  }
+
+  /** The one land/load path: the index of `spec` over the corpus dir's
+    * embeddings `emb` — built in memory from seeded or freshly trained
+    * quantizers, or landed-or-loaded ([[landedIndex]]) — plus the probes
+    * of `queries` when training collected them on the way.
+    *
+    * The trained paths keep their job overlap ([[overlapJobs]], guide
+    * §2.6). Raw: the coarse k-means and the codebook trainer are
+    * INDEPENDENT chains of small-result barriers whose tails leave
+    * executor slots idle, so the book trains on a second local thread
+    * while the main thread trains the cells and collects the probes.
+    * Residual: the book trains on the residual table, which feeds TWO
+    * consumers (book trainer and encode), so it is pinned ONCE
+    * (localCheckpoint; byte bound corpus × (dim doubles + ids),
+    * executor-local — the materialization a landed build writes as
+    * parquet anyway), and the book training overlaps the probe-dot
+    * collect. Results are the same computations either way. */
+  def ensureIvfPq(spark: SparkSession, dir: String, spec: IvfPqSpec,
+      emb: DataFrame, queries: DataFrame): (IvfPqIndex, Option[Seq[Probe]]) =
+    spec match {
+      case IvfPqSpec(Seeded, _, _) =>
+        (IvfPqIndex.build(emb, defaultCentroids(emb), pqCodebook()), None)
+      case IvfPqSpec(Trained, _, false) =>
+        val (book, (cents, probes)) = overlapJobs(spark)(pqCodebookTrained(emb)) {
+          val cents = kmeansCentroidsAuto(emb)
+          (cents, collectProbes(queries, cents, nprobe = 4))
+        }
+        (IvfPqIndex.build(emb, cents, book), Some(probes))
+      case IvfPqSpec(Trained, _, true) =>
+        val cents = kmeansCentroidsAuto(emb)
+        val resid = residuals(emb, cents).localCheckpoint()
+        val (book, probes) = overlapJobs(spark)(
+          pqCodebookTrained(resid.select("vec_id", "embedding")))(
+          collectProbes(queries, cents, nprobe = 4, withDot = true))
+        (IvfPqIndex(ivfPqIndexRows(resid, book), cents, book, residual = true),
+          Some(probes))
+      case IvfPqSpec(Landed, scaled, residual) =>
+        (landedIndex(spark, dir, emb, scaled, residual), None)
+    }
+
+  /** CORRECTNESS/bench entry of every IVF-PQ registry variant: the top-k
+    * of the `queryIds` probe vectors under `spec` — the plain ADC cut, or
+    * with `refine = Some(r)` the exact re-rank of an r·k ADC cut
+    * ([[refinedSearchIndex]]). Landed specs pay training + land on the
+    * first call on a fresh catalog (Bench's unmeasured warm-up, Verify's
+    * only pass) and serve-only after; every spec gives the answer of its
+    * trained or seeded rebuild (training and encode are deterministic). */
+  def topKPqIvf(spark: SparkSession, dir: String, spec: IvfPqSpec, k: Int = 5,
+      refine: Option[Int] = None,
+      queryIds: Seq[Long] = defaultProbeIds): DataFrame = {
+    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+    ivfPqTopK(spark, dir, spec, emb, defaultQueries(emb, queryIds), k, refine)
+  }
+
+  private def ivfPqTopK(spark: SparkSession, dir: String, spec: IvfPqSpec,
+      emb: DataFrame, queries: DataFrame, k: Int,
+      refine: Option[Int]): DataFrame = {
+    val (index, probes) = ensureIvfPq(spark, dir, spec, emb, queries)
+    refine match {
+      case Some(r) => refinedSearchIndex(emb, index, queries, k, r, probesPre = probes)
+      case None => searchIvfPqIndex(index, queries, k, probesPre = probes)
+    }
+  }
+
+  /** ANN quality evaluation — recall@k of the [[topKPqIvf]] search against
+    * the exact cosine ground truth, per probe query: the operational
+    * metric every ANN deployment monitors before trusting a compressed
+    * serve, and tunes nprobe/codebook sizing/r against (refined recall can
+    * only rise vs the unrefined cut — the wide-cut dominance argument,
+    * spec-pinned). Every probe query reports, even at zero overlap.
+    *
+    * The exact leg (one corpus-linear scan — what ground truth costs; a
+    * deployment runs it on a sampled probe set, the |Q|-bounded shape
+    * here) and the ANN leg's eager probe/candidate collects are
+    * independent chains: overlap them ([[overlapJobs]], guide §2.6). The
+    * exact leg pins its ≤ k·|Q|-row cut so the overlap count reads a
+    * materialized leaf; the count runs over driver-scale rows. */
+  def annRecall(spark: SparkSession, dir: String, spec: IvfPqSpec, k: Int = 5,
+      refine: Option[Int] = None,
+      queryIds: Seq[Long] = defaultProbeIds): DataFrame = {
+    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+    val queries = defaultQueries(emb, queryIds)
+    val (exact, ann) = overlapJobs(spark)(
+      topKCosine(emb, queries, k).select("query_id", "vec_id").localCheckpoint())(
+      ivfPqTopK(spark, dir, spec, emb, queries, k, refine).select("query_id", "vec_id"))
     val overlap = ann.join(exact, Seq("query_id", "vec_id"))
       .groupBy("query_id").agg(count(lit(1)).as("n_overlap"))
     ann.select("query_id").distinct()
@@ -1201,6 +1327,29 @@ object Similarity {
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
         round(coalesce(col("n_overlap"), lit(0L)) / lit(k.toDouble), 6)
           .as("recall"))
+  }
+
+  /** STEADY-STATE trained IVF-PQ: both landed quantizers
+    * ([[landedQuantizers]]), memoized per corpus dir so repeat calls
+    * within a process skip even the tiny table reads; the timed passes
+    * measure assignment + encode + prune + ADC in memory. Same answer,
+    * same oracle as the trained rebuild. Memo invalidation contract:
+    * artifacts are keyed by corpus dir and assumed immutable-per-dir (the
+    * testdata layout); a corpus rewritten in place needs its `<prefix>_*`
+    * tables dropped to retrain. */
+  private val trainedIvfPq =
+    collection.concurrent.TrieMap[String, (Seq[(Long, Array[Float])], Book)]()
+  def topKPqIvfSteady(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
+    val (cents, book) = trainedIvfPq.getOrElseUpdate(dir, {
+      import spark.implicits._
+      val (centDf, b) = landedQuantizers(spark, dir)
+      (centDf.as[(Long, Array[Float])].collect().toSeq, b)
+    })
+    import spark.implicits._
+    val centDf = cents.toDF("cell_id", "c_emb")
+      .select(col("cell_id"), col("c_emb").cast("array<float>").as("c_emb"))
+    searchIvfPqIndex(IvfPqIndex.build(emb, centDf, book), defaultQueries(emb), k)
   }
 
   /** Corpus cluster assignments under the TRAINED k-means centroids —
@@ -1219,7 +1368,7 @@ object Similarity {
   }
 
   /** STEADY-STATE form of [[kmeansAssignments]] — two-level assignment
-    * under the LANDED trained centroids ([[landQuantizers]]), no Lloyd's
+    * under the LANDED trained centroids ([[landedQuantizers]]), no Lloyd's
     * over the corpus in the plan: the timed cost is the O(N·√k)
     * production labeling pass (training is a separate, amortized land;
     * the coarse level trains over the k centroid ROWS per call — o(N·√k),
@@ -1240,7 +1389,7 @@ object Similarity {
     * O(N·k) cross is this entry's documented cost. */
   def kmeansAssignmentsFlat(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    ivfAssign(emb, loadLandedQuantizers(spark, dir)._1).select("vec_id", "cell_id")
+    ivfAssign(emb, landedQuantizers(spark, dir)._1).select("vec_id", "cell_id")
   }
 
   /** EMBEDDING-DISTRIBUTION drift — the Population Stability Index over
@@ -1415,7 +1564,7 @@ object Similarity {
   }
 
   /** STEADY-STATE [[knnGraphDocs]]: cells AND the two-level assignment
-    * index from the LANDED artifacts ([[landQuantizers]] +
+    * index from the LANDED artifacts ([[landedQuantizers]] +
     * [[loadLandedHierIndex]]) — no Lloyd's anywhere in the plan; the
     * timed cost is the two-stage assignment + the blocked pairwise
     * scoring + k-cut, the recurring production build. Same answer, same
@@ -1483,346 +1632,6 @@ object Similarity {
     val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
     val (coarseLive, grouped) = loadLandedHierIndex(spark, dir)
     densityPruneFrom(emb, knnGraphWith(emb, coarseLive, grouped, nn), pct)
-  }
-
-  /** The END-TO-END trained production ANN stack: k-means coarse cells
-    * ([[kmeansCentroids]]) × per-subspace-Lloyd's PQ codebook
-    * ([[pqCodebookTrained]]) through the same inverted-list prune +
-    * ADC-score plan. Training cost is the two trainers' documented
-    * bounded-shuffle iterations; serving cost is identical to the seeded
-    * form. */
-  def topKPqIvfTrained(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    // The two quantizer trainings are INDEPENDENT job chains (the coarse
-    // k-means never reads the codebook and vice versa — the raw-vector
-    // book, unlike the residual form's). Overlap them from a second
-    // driver thread (guide §2.6): each trainer is a sequence of
-    // small-result barriers whose tails leave most executor slots idle,
-    // and the scheduler back-fills those slots with the other trainer's
-    // jobs. Results are unchanged — same two trainings, same inputs.
-    // r18: the overlap runs through [[overlapJobs]] (r17 advisory — the
-    // dedicated-thread/description/await-in-finally discipline), and the
-    // probe assignment (which needs only the coarse cells) now also
-    // overlaps the codebook trainer's tail on the main thread.
-    val queries = defaultQueries(emb)
-    val (book, (cents, probes)) = overlapJobs(spark)(pqCodebookTrained(emb)) {
-      val cents = kmeansCentroidsAuto(emb)
-      (cents, collectProbes(queries, cents, nprobe = 4))
-    }
-    searchIvfPqIndex(ivfPqIndexRows(emb, m = 8, subDim = 8, cents, book),
-      queries, k, nprobe = 4, m = 8, subDim = 8, cents, book, Some(probes))
-  }
-
-  /** Coarse-cell RESIDUALS — r = e − c(cell(e)), computed in DOUBLE so
-    * the subtraction is bit-identical cross-engine: the input of the
-    * residual-PQ form below. One assignment cross + a broadcast centroid
-    * fetch + a row-local zip; the output column is named `embedding` so
-    * every PQ trainer/encoder consumes it unchanged. */
-  def residuals(emb: DataFrame, centroids: DataFrame): DataFrame =
-    ivfAssign(emb, centroids)
-      .join(broadcast(centroids), "cell_id")
-      .select(col("vec_id"), col("cell_id"),
-        zip_with(col("embedding"), col("c_emb"),
-          (x, c) => x.cast("double") - c.cast("double")).as("embedding"))
-
-  /** RESIDUAL IVF-PQ index rows — the encode production systems
-    * actually ship (Jégou et al., TPAMI 2011 §IV.B; the FAISS IVFPQ
-    * default): PQ quantizes the RESIDUAL r = e − c instead of the raw
-    * vector, because residuals concentrate near the origin once the
-    * coarse quantizer has soaked up the between-cell variance — the
-    * same codebook budget then spends its cells on a far smaller
-    * support, cutting quantization error (spec-measured vs the raw
-    * form). Same (vec_id, cell_id, sub, code) layout as
-    * [[ivfPqIndexRows]], so landing/bucketing/pruning carry over. */
-  def ivfPqResIndexRows(resid: DataFrame, m: Int, subDim: Int,
-      b: Seq[(Int, Int, Array[Double])]): DataFrame =
-    pqEncodeWithBook(resid.select("vec_id", "embedding"), m, subDim, b)
-      .select(col("vec_id"), posexplode(
-        array((0 until m).map(s => col(s"code_$s")): _*)))
-      .toDF("vec_id", "sub", "code")
-      .join(resid.select("vec_id", "cell_id"), "vec_id")
-
-  /** [[collectProbes]] carrying the raw q·c dot of each probed cell —
-    * the additive term of the residual ADC decomposition
-    * q·v ≈ q·c + Σ_s q_s·r̂_s. Same bounded-collect class; the dot is a
-    * sequential left fold, matching the oracle's `list_inner_product`
-    * order exactly. */
-  def collectProbesDot(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int): Seq[(Long, Long, Double)] = {
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cs").desc, col("cell_id").asc)
-    val qcDot = aggregate(zip_with(col("q_emb"), col("c_emb"),
-      (x, c) => x.cast("double") * c.cast("double")), lit(0.0d), (a, t) => a + t)
-    queries.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("cell_id"),
-        GraftFunctions.cosineSim(col("q_emb"), col("c_emb")).as("cs"),
-        qcDot.as("qc"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id").cast("long"), col("cell_id").cast("long"),
-        col("qc"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq.sortBy(t => (t._1, t._2))
-  }
-
-  /** The serve half of the residual form: prune to the probed cells
-    * (same literal `cell_id IN (…)` scan prune as [[searchIvfPqIndex]]),
-    * then score q·v ≈ q·c_probed + Σ_s LUT — the per-(query, cell) dot
-    * rides the broadcast probe rows, the LUT is unchanged (the residual
-    * decomposition reuses the same subspace dots). 6-dp round before
-    * the k-cut, the shared ADC drift rule. */
-  def searchIvfPqResIndex(index: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, m: Int, subDim: Int, centroids: DataFrame,
-      b: Seq[(Int, Int, Array[Double])],
-      probesPre: Option[Seq[(Long, Long, Double)]] = None): DataFrame = {
-    val probePairs = probesPre.getOrElse(
-      collectProbesDot(queries, centroids, nprobe))
-    val cells = probePairs.map(_._2).distinct.sorted
-    val spark = index.sparkSession
-    import spark.implicits._
-    val probes = probePairs.toDF("query_id", "cell_id", "qc")
-    val lutRows = pqLutRows(queries, m, subDim, b)
-      .withColumnRenamed("cell", "code")
-    val cand = index.filter(col("cell_id").isin(cells: _*))
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val scored = cand
-      .join(broadcast(lutRows), Seq("query_id", "sub", "code"))
-      .groupBy("query_id", "vec_id")
-      .agg(round(max(col("qc")) + sum(col("w")), 6).as("score"))
-    topKCut(scored, k)
-  }
-
-  /** The TRAINED residual IVF-PQ entry — both quantizers trained the
-    * production way: k-means coarse cells over the corpus, then
-    * per-subspace Lloyd's over the RESIDUAL table (training on
-    * residuals is the point — a book trained on raw vectors wastes its
-    * cells on between-cell variance the coarse quantizer already
-    * removed). The residual table feeds TWO consumers — the codebook
-    * trainer and the encode — and until r17 was computed twice (a full
-    * assignment + subtraction pass each, the then-documented retrain
-    * cost). It is now pinned ONCE (localCheckpoint — the multi-consumer
-    * mid-plan convention shared with `modularityDocs`; byte bound:
-    * corpus × (dim doubles + ids), executor-local — the same
-    * materialization a landed build writes as parquet anyway). One full
-    * assignment + subtraction pass saved per rebuild. */
-  def topKPqIvfResTrained(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val cents = kmeansCentroidsAuto(emb)
-    val resid = residuals(emb, cents).localCheckpoint()
-    // the residual-book training and the probe-dot collect are
-    // independent job chains once cents and the pinned residual table
-    // exist — overlap them the way the raw trained form overlaps its two
-    // trainers ([[overlapJobs]], guide §2.6)
-    val queries = defaultQueries(emb)
-    val (book, probes) = overlapJobs(spark)(
-      pqCodebookTrained(resid.select("vec_id", "embedding")))(
-      collectProbesDot(queries, cents, nprobe = 4))
-    searchIvfPqResIndex(ivfPqResIndexRows(resid, m = 8, subDim = 8, book),
-      queries, k, nprobe = 4, m = 8, subDim = 8, cents, book, Some(probes))
-  }
-
-  /** Land the RESIDUAL-form artifacts next to the raw ones: the
-    * residual-trained codebook (`<prefix>_res_codebook`) and the
-    * cell-BUCKETED residual code table (`<prefix>_res_codes` — the
-    * [[landIvfPqCodes]] inverted-list layout, so the residual serve
-    * prunes buckets identically). Coarse centroids are shared with the
-    * raw form ([[landQuantizers]] — same k-means, same corpus). */
-  def landResQuantizers(spark: SparkSession, dir: String, path: String,
-      m: Int = 8, subDim: Int = 8, buckets: Int = 16): Unit = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, _) = loadLandedQuantizers(spark, dir)
-    val resid = residuals(emb, centDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val book = pqCodebookTrained(resid.select("vec_id", "embedding"))
-    val prefix = quantizerPrefix(dir)
-    import spark.implicits._
-    book.toDF("sub", "cell", "cv")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/res_codebook").saveAsTable(s"${prefix}_res_codebook")
-    graft.sources.Layout.writeBucketed(
-      ivfPqResIndexRows(resid, m, subDim, book),
-      s"${prefix}_res_codes", Seq("cell_id"),
-      Seq("cell_id", "vec_id", "sub"), buckets, s"$path/res_codes")
-    resid.unpersist()
-    ()
-  }
-
-  /** Ensure the residual artifacts are landed and return (codes table,
-    * coarse centroid table, residual book literals). */
-  def ensureResArtifacts(spark: SparkSession, dir: String): (DataFrame, DataFrame, Seq[(Int, Int, Array[Double])]) = {
-    val prefix = quantizerPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, s"${prefix}_res",
-      Seq(s"${prefix}_res_codebook", s"${prefix}_res_codes")) { path =>
-      landResQuantizers(spark, dir, path)
-    }
-    val book = spark.table(s"${prefix}_res_codebook").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .toSeq.sortBy(t => (t._1, t._2))
-    (spark.table(s"${prefix}_res_codes"),
-      loadLandedQuantizers(spark, dir)._1, book)
-  }
-
-  /** Residual IVF-PQ serve FROM THE LANDED ARTIFACTS — no training and
-    * no encode anywhere in the plan: coarse centroids off their landed
-    * table, residual book literals off the landed `_res_codebook`, and
-    * candidates from the cell-BUCKETED `_res_codes` through the same
-    * bucket-pruned scan as [[topKPqIvfLanded]]. Same answer, same
-    * oracle as the retrain entry (both trainings and the residual
-    * subtraction are deterministic). */
-  def topKPqIvfResLanded(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (codes, centDf, book) = ensureResArtifacts(spark, dir)
-    searchIvfPqResIndex(codes, defaultQueries(emb), k, nprobe = 4,
-      m = 8, subDim = 8, centDf, book)
-  }
-
-  /** The composed BEST production read path — residual candidates,
-    * exact re-rank, everything landed: stage 1 is
-    * [[topKPqIvfResLanded]]'s bucket-pruned residual ADC widened to
-    * r·k (the best compressed scorer), stage 2 the literal-id-pruned
-    * exact re-rank ([[refineCandidates]]). The two dials compose
-    * independently: residual encoding cuts the compressed-score error
-    * (so the wide cut ranks better candidates in), refine removes the
-    * remaining compression error from the final k. */
-  def topKPqIvfResRefined(spark: SparkSession, dir: String, k: Int = 5,
-      r: Int = 4): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (codes, centDf, book) = ensureResArtifacts(spark, dir)
-    val cand = searchIvfPqResIndex(codes, defaultQueries(emb), k * r,
-        nprobe = 4, m = 8, subDim = 8, centDf, book)
-      .select(col("query_id").cast("long"), col("vec_id").cast("long"))
-      .collect().map(rw => (rw.getLong(0), rw.getLong(1))).toSeq.sorted
-    refineCandidates(emb, defaultQueries(emb), cand, k)
-  }
-
-  /** Catalog table-name prefix for the LANDED trained quantizers of a
-    * corpus dir: MD5 of the dir (same collision rationale as
-    * [[graft.operators.Dedup.steadyIndexPrefix]] — a 31-bit
-    * `String.hashCode` clash between two corpus dirs would silently
-    * serve with the wrong quantizers). Public so the spec pins the
-    * naming scheme. */
-  def quantizerPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"ivfpq_quant_$suffix"
-  }
-
-  /** Train and LAND both IVF-PQ quantizer artifacts as parquet catalog
-    * tables — the durable form of what [[topKPqIvfSteady]] previously
-    * kept only in a process-local memo: `<prefix>_centroids`
-    * (cell_id, c_emb — the k-means coarse cells) and `<prefix>_codebook`
-    * (sub, cell, cv — the per-subspace Lloyd's PQ book). Both are
-    * bounded-size (k rows / m·kc rows); landing is one tiny write each,
-    * and a restarted process RELOADS instead of retraining (hours at
-    * scale). The `landNearDupIndex` / BPE-merge-table pattern applied to
-    * ANN. */
-  def landQuantizers(spark: SparkSession, dir: String, path: String): Unit = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val prefix = quantizerPrefix(dir)
-    import spark.implicits._
-    kmeansCentroidsAuto(emb)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/centroids").saveAsTable(s"${prefix}_centroids")
-    pqCodebookTrained(emb).toDF("sub", "cell", "cv")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/codebook").saveAsTable(s"${prefix}_codebook")
-  }
-
-  /** Ensure the trained quantizers are landed for `dir` and return them:
-    * the centroid DataFrame straight off the landed table (it joins as a
-    * broadcast side — no collect needed) and the codebook collected to
-    * plan literals (m·kc rows — the bounded-collect class the trainers
-    * already use). BOTH tables must exist or both are re-landed: a land
-    * that failed between the two writes must not wedge every later serve
-    * on the missing codebook side. */
-  def loadLandedQuantizers(spark: SparkSession, dir: String): (DataFrame, Seq[(Int, Int, Array[Double])]) = {
-    val prefix = quantizerPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, s"${prefix}_quant",
-      Seq(s"${prefix}_centroids", s"${prefix}_codebook")) { path =>
-      landQuantizers(spark, dir, path)
-    }
-    val book = spark.table(s"${prefix}_codebook").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .toSeq.sortBy(t => (t._1, t._2))
-    (spark.table(s"${prefix}_centroids"), book)
-  }
-
-  /** Land the IVF-PQ inverted code list as a parquet catalog table
-    * BUCKETED BY `cell_id` — the physical inverted-list layout: each
-    * coarse cell's code rows live in a known bucket, so a serve-time
-    * `cell_id IN (probed cells)` prunes buckets and reads ONLY the probed
-    * inverted lists (at 100 TB that is the whole point of IVF — the
-    * round-9 layout kept cell_id as an ordinary column and every query
-    * scanned the full code table). Per-bucket sort (cell_id, vec_id, sub)
-    * keeps each vector's m code rows adjacent. Bucket count: ≈ table
-    * size / 128–256 MiB at scale (the [[graft.sources.Layout]] rule);
-    * 16 here spans the trained cell count at test SF. */
-  def landIvfPqCodes(spark: SparkSession, dir: String, path: String,
-      m: Int = 8, subDim: Int = 8, buckets: Int = 16): Unit = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizers(spark, dir)
-    graft.sources.Layout.writeBucketed(
-      ivfPqIndexRows(emb, m, subDim, centDf, book),
-      s"${quantizerPrefix(dir)}_codes", Seq("cell_id"),
-      Seq("cell_id", "vec_id", "sub"), buckets, s"$path/codes")
-  }
-
-  /** Ensure the corpus dir's code list is landed ([[landIvfPqCodes]]) and
-    * return it. First call on a fresh catalog pays one scan-side encode +
-    * bucketed write (training lands via [[loadLandedQuantizers]] if
-    * needed); every later call — including in a NEW process on the same
-    * catalog — reads the table. */
-  def ensureIvfPqCodes(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"${quantizerPrefix(dir)}_codes"
-    graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
-      landIvfPqCodes(spark, dir, path)
-    }
-    spark.table(table)
-  }
-
-  /** IVF-PQ serve FROM THE LANDED ARTIFACTS — the restart-durable
-    * production path: no Lloyd's and no scan-side encode anywhere in the
-    * plan; the coarse centroids broadcast straight off their parquet
-    * table, the codebook literals come from the landed book, and the
-    * candidate rows come from the cell-BUCKETED landed code list
-    * ([[ensureIvfPqCodes]]) through a bucket-pruned scan — per-query read
-    * cost tracks probed cells, not corpus size. First call on a fresh
-    * catalog pays one training+land (Bench's unmeasured warm-up, Verify's
-    * only pass); every call after is serve-only. Same answer, same oracle
-    * as the retrain entry (training and encode are deterministic). */
-  def topKPqIvfLanded(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizers(spark, dir)
-    searchIvfPqIndex(ensureIvfPqCodes(spark, dir), defaultQueries(emb),
-      k, nprobe = 4, m = 8, subDim = 8, centDf, book)
-  }
-
-  /** STEADY-STATE form of [[topKPqIvfTrained]]: both trained quantizers —
-    * the k-means centroid table (k rows) and the PQ codebook — come from
-    * the LANDED artifact tables ([[landQuantizers]]), memoized per corpus
-    * dir so repeat calls within a process skip even the tiny table reads.
-    * A restarted process re-READS the landed tables (milliseconds)
-    * instead of retraining (the round-8 TrieMap-only gap); the timed
-    * passes measure the serve path only: assignment + encode + prune +
-    * ADC. Same answer, same oracle as the retrain entry. Memo
-    * invalidation contract: artifacts are keyed by corpus dir and assumed
-    * immutable-per-dir (the testdata layout); a corpus rewritten in place
-    * needs its `<prefix>_*` tables dropped to retrain. */
-  private val trainedIvfPq = collection.concurrent.TrieMap[String,
-    (Seq[(Long, Array[Float])], Seq[(Int, Int, Array[Double])])]()
-  def topKPqIvfSteady(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (cents, book) = trainedIvfPq.getOrElseUpdate(dir, {
-      import spark.implicits._
-      val (centDf, b) = loadLandedQuantizers(spark, dir)
-      (centDf.as[(Long, Array[Float])].collect().toSeq, b)
-    })
-    import spark.implicits._
-    val centDf = cents.toDF("cell_id", "c_emb")
-      .select(col("cell_id"), col("c_emb").cast("array<float>").as("c_emb"))
-    topKPqIvfWith(emb, defaultQueries(emb), k, nprobe = 4, m = 8, subDim = 8,
-      centDf, book)
   }
 
   /** Symmetric int8 embedding quantization: per-vector scale =
@@ -2033,10 +1842,8 @@ object Similarity {
     graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
       val (w, shift) = whitener(emb, eps)
       import spark.implicits._
-      w.zipWithIndex.map { case (row, j) => (j.toLong, shift(j), row.toSeq) }
-        .toSeq.toDF("j", "shift", "w")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/whiten").saveAsTable(table)
+      saveTable(w.zipWithIndex.map { case (row, j) => (j.toLong, shift(j), row.toSeq) }
+        .toSeq.toDF("j", "shift", "w"), table, s"$path/whiten")
     }
     val rows = spark.table(table).orderBy("j").collect() // d rows — bounded
     val w = rows.map(_.getSeq[Double](2).toArray)
@@ -2167,121 +1974,4 @@ object Similarity {
     topKCosineLshMp(emb, col("vec_id").isin(defaultProbeIds: _*), k)
   }
 
-  // --------------------------------------------------------------------
-  // √N-SIZED coarse quantizer — the production IVF sizing rule
-  // demonstrated, not just asserted: the fixed-initEvery trainer above
-  // grows |cells| ∝ N (constant ~29-vector lists, but the probe argmax
-  // scores |Q|·|cells| centroids and the bucketed layout's FIXED fan-out
-  // caps pruning at nprobe/16 of a linearly-growing table), while the
-  // textbook balance point (Jégou et al., TPAMI 2011 §V: |cells| = O(√N)
-  // equalizes the probe-selection and list-scan terms) holds BOTH
-  // per-query terms at O(√N): nprobe fixed ⇒ probed-list reads
-  // ∝ N/|cells| = √N, centroid scoring ∝ |cells| = √N. The serve plan is
-  // UNCHANGED ([[searchIvfPqIndex]]/[[refinedSearchIndex]] verbatim) —
-  // only the sizing and the landed layout's fan-out move with the corpus.
-  // --------------------------------------------------------------------
-
-  /** The √N sizing, as the trainer's init stride: every `round(√N)`-th
-    * vector seeds a cell, giving ≈ √N seeds (and, on this corpus, ≈ √N
-    * trained cells — Lloyd's drops only emptied cells). Deterministic
-    * from the corpus count and reproduced verbatim by the oracle's
-    * `round(sqrt(count(*)))` scalar subquery — Java's half-up round and
-    * DuckDB's half-away agree on positives. */
-  def scaledInitEvery(n: Long): Int =
-    math.max(2L, math.round(math.sqrt(n.toDouble))).toInt
-
-  /** Catalog prefix for the √N-sized artifacts — a separate family from
-    * [[quantizerPrefix]]'s fixed-sizing one (both are legitimate dials;
-    * the spec compares them). */
-  def quantizerPrefixScaled(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"ivfpq_quant_scaled_$suffix"
-  }
-
-  /** Train and land the √N-cell coarse centroids. The PQ codebook is
-    * deliberately SHARED with the fixed-sizing family
-    * ([[loadLandedQuantizers]]'s `_codebook`): subspace quantization is
-    * independent of the coarse partition, so re-sizing the IVF never
-    * retrains PQ — exactly the production re-shard path (re-cluster +
-    * re-assign, codes unchanged per vector). */
-  def landQuantizersScaled(spark: SparkSession, dir: String, path: String): Unit = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    kmeansCentroids(emb, initEvery = scaledInitEvery(emb.count()))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/centroids")
-      .saveAsTable(s"${quantizerPrefixScaled(dir)}_centroids")
-  }
-
-  /** The √N-sized quantizer pair: scaled centroids (landing them on
-    * first use) + the shared landed PQ book. */
-  def loadLandedQuantizersScaled(spark: SparkSession, dir: String): (DataFrame, Seq[(Int, Int, Array[Double])]) = {
-    val prefix = quantizerPrefixScaled(dir)
-    graft.sources.Landing.ensureLanded(spark, s"${prefix}_quant",
-      Seq(s"${prefix}_centroids")) { path =>
-      landQuantizersScaled(spark, dir, path)
-    }
-    (spark.table(s"${prefix}_centroids"), loadLandedQuantizers(spark, dir)._2)
-  }
-
-  /** Land the √N-sized inverted code list, bucketed by `cell_id` with
-    * the fan-out GROWN WITH THE CELL COUNT (one bucket per trained cell
-    * here — ~√N buckets), so `cell_id IN (probed)` prunes to nprobe
-    * buckets of ~√N code rows each: per-query physical reads ∝ √N where
-    * the fixed-16-bucket layout reads nprobe/16 of a table ∝ N.
-    *
-    * Layout choice at production cell counts (PLANS.md round-12 note):
-    * thousands-to-millions of cells do NOT mean that many buckets — cap
-    * the fan-out at table-size/128–256 MiB ([[graft.sources.Layout]]'s
-    * rule) and let consecutive cells share a bucket; pruning granularity
-    * stays the bucket, so per-query reads become
-    * nprobe · cellsPerBucket · listLen — still ∝ √N for any FIXED
-    * cells-per-bucket, without the small-file pathology a
-    * bucket-per-cell (or `partitionBy("cell_id")`) layout hits when
-    * cells ≫ files-worth-of-data. `maxBuckets` models the cap; the test
-    * corpora sit below it, so the demo lands one cell per bucket. */
-  def landIvfPqCodesScaled(spark: SparkSession, dir: String, path: String,
-      m: Int = 8, subDim: Int = 8, maxBuckets: Int = 256): Unit = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizersScaled(spark, dir)
-    val buckets = math.min(centDf.count(), maxBuckets.toLong).toInt
-    graft.sources.Layout.writeBucketed(
-      ivfPqIndexRows(emb, m, subDim, centDf, book),
-      s"${quantizerPrefixScaled(dir)}_codes", Seq("cell_id"),
-      Seq("cell_id", "vec_id", "sub"), buckets, s"$path/codes")
-  }
-
-  /** Ensure the √N-sized code list is landed and return it. */
-  def ensureIvfPqCodesScaled(spark: SparkSession, dir: String): DataFrame = {
-    val table = s"${quantizerPrefixScaled(dir)}_codes"
-    graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
-      landIvfPqCodesScaled(spark, dir, path)
-    }
-    spark.table(table)
-  }
-
-  /** IVF-PQ serve off the √N-sized landed artifacts —
-    * [[topKPqIvfLanded]]'s plan verbatim (bucket-pruned candidate scan,
-    * broadcast probes/LUT, partial-merge ADC), only the quantizer sizing
-    * and bucket fan-out differ. The entry whose sf0.1→sf1 bench row
-    * demonstrates the flat(ish) serve the fixed sizing can't give. */
-  def topKPqIvfLandedScaled(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizersScaled(spark, dir)
-    searchIvfPqIndex(ensureIvfPqCodesScaled(spark, dir), defaultQueries(emb),
-      k, nprobe = 4, m = 8, subDim = 8, centDf, book)
-  }
-
-  /** Two-stage refined serve off the √N-sized landed artifacts —
-    * [[topKPqIvfRefinedLanded]] with the scaled sizing: the wide ADC cut
-    * reads nprobe ≈ √N-row inverted lists, the exact re-rank touches
-    * |Q|·r·k full vectors. The production read path at the production
-    * sizing. */
-  def topKPqIvfRefinedLandedScaled(spark: SparkSession, dir: String,
-      k: Int = 5, r: Int = 4): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val (centDf, book) = loadLandedQuantizersScaled(spark, dir)
-    refinedSearchIndex(emb, ensureIvfPqCodesScaled(spark, dir),
-      defaultQueries(emb), k, r, nprobe = 4, m = 8, subDim = 8, centDf, book)
-  }
 }

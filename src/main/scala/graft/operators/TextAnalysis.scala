@@ -1319,22 +1319,19 @@ object TextAnalysis {
     * leg is monitored by the same annRecall harness the plain serves
     * use.
     *
-    * Takes the prebuilt code `index` + fixed quantizers so the landed
-    * ([[hybridDocsSteady]]) and streamed
-    * ([[graft.streaming.StreamHybrid.searchSteady]]) serves share one
-    * composer with the from-scratch spec form. */
+    * Takes a prebuilt IVF-PQ `index` so the landed ([[hybridDocsSteady]])
+    * and streamed ([[graft.streaming.StreamHybrid.searchSteady]]) serves
+    * share one composer with the from-scratch spec form. */
   def hybridSearchCompressed(docs: DataFrame, emb: DataFrame,
-      index: DataFrame, centroids: DataFrame,
-      book: Seq[(Int, Int, Array[Double])], idCol: String, textCol: String,
+      index: Similarity.IvfPqIndex, idCol: String, textCol: String,
       query: Seq[String], queryVecId: Long, depth: Int = 50, k: Int = 25,
-      k0: Int = 60, r: Int = 4, nprobe: Int = 4, m: Int = 8,
-      subDim: Int = 8): DataFrame = {
+      k0: Int = 60, r: Int = 4, nprobe: Int = 4): DataFrame = {
     val lex = bm25Rank(docs, idCol, textCol, query, depth)
       .select(col(idCol).as("doc_id"), col("score"))
     val queries = emb.filter(col("vec_id") === queryVecId)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val dense = Similarity.refinedSearchIndex(emb, index, queries,
-        depth, r, nprobe, m, subDim, centroids, book)
+        depth, r, nprobe)
       .select(col("vec_id").as("doc_id"), col("score"))
     rrfFuse(lex, dense, k, k0)
   }
@@ -1343,10 +1340,10 @@ object TextAnalysis {
     * the lexical leg from the bucket-pruned inverted index
     * ([[bm25RankIndexed]], the `txt_bm25_steady` serve), the dense leg
     * from the cell-bucketed landed IVF-PQ code table through the
-    * refined two-stage serve ([[Similarity.ensureIvfPqCodes]] +
-    * [[Similarity.refinedSearchIndex]] — the `sim_topk_refine_landed`
-    * serve). No tokenize, no training, no encode, and NO corpus-linear
-    * scan anywhere in the timed plan: per-query cost is
+    * refined two-stage serve ([[Similarity.topKPqIvf]] under the landed
+    * spec — the `sim_topk_refine_landed` serve). No tokenize, no
+    * training, no encode, and NO corpus-linear scan anywhere in the
+    * timed plan: per-query cost is
     * postings-of-query-terms + probed inverted code lists + a bounded
     * exact re-rank. The oracle replays the approximate dense branch
     * exactly (trained quantizers + ADC + refine in SQL — the
@@ -1354,11 +1351,6 @@ object TextAnalysis {
   def hybridDocsSteady(spark: SparkSession, dir: String,
       depth: Int = 50, k: Int = 25, k0: Int = 60, r: Int = 4): DataFrame = {
     ensureSearchIndex(spark, dir)
-    val emb = Tables.load(spark, dir, "embeddings").select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") === 0L)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val (centDf, book) = Similarity.loadLandedQuantizers(spark, dir)
-    val codes = Similarity.ensureIvfPqCodes(spark, dir)
     // the lexical top-depth cut and the dense leg's eager probe/refine
     // collects are INDEPENDENT job chains — overlap them (guide §2.6 via
     // [[Similarity.overlapJobs]]; the r17 verdict ask). The lex leg pins
@@ -1367,8 +1359,8 @@ object TextAnalysis {
     val (lex, dense) = Similarity.overlapJobs(spark)(
       bm25RankIndexed(spark, searchIndexPrefix(dir), searchQuery, k = depth)
         .select(col("doc_id"), col("score")).localCheckpoint()) {
-      Similarity.refinedSearchIndex(emb, codes, queries, depth, r,
-          nprobe = 4, m = 8, subDim = 8, centDf, book)
+      Similarity.topKPqIvf(spark, dir, Similarity.IvfPqSpec(Similarity.Landed),
+          k = depth, refine = Some(r), queryIds = Seq(0L))
         .select(col("vec_id").as("doc_id"), col("score"))
     }
     rrfFuse(lex, dense, k, k0)

@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * SCOPE: tombstones govern the GENERATION-layout state the streaming
   * maintainers own. The catalog-table steady serves
   * ([[graft.operators.TextAnalysis.searchDocsSteady]],
-  * [[graft.operators.Similarity.topKPqIvfLanded]], the banded dedup
+  * [[graft.operators.Similarity.topKPqIvf]], the banded dedup
   * tables) are a different artifact class: landed once per IMMUTABLE
   * corpus dir (their documented memo-invalidation contract — a corpus
   * changed in place requires dropping the `<prefix>_*` tables, which

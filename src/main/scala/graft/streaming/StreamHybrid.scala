@@ -57,8 +57,7 @@ object StreamHybrid {
       embCol: String = "embedding",
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0,
-      quantizers: Option[(DataFrame, Seq[(Int, Int, Array[Double])])] = None,
-      m: Int = 8, subDim: Int = 8): StreamingQuery =
+      quantizers: Option[(DataFrame, Similarity.Book)] = None): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -73,7 +72,7 @@ object StreamHybrid {
           // shared per-batch body — resolves a re-shard's sidecar
           // centroids and skips empty batches (the StreamIvfPq rules)
           StreamIvfPq.indexBatch(vecs, s"$stateDir/codes", id,
-            centroids, book, m, subDim)
+            centroids, book)
         }
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
           compactState(spark, stateDir)
@@ -157,8 +156,7 @@ object StreamHybrid {
   def searchSteady(spark: SparkSession, stateDir: String,
       query: Seq[String], queryVecId: Long, centroids: DataFrame,
       book: Seq[(Int, Int, Array[Double])], depth: Int = 50, k: Int = 25,
-      k0: Int = 60, r: Int = 4, nprobe: Int = 4, m: Int = 8,
-      subDim: Int = 8): DataFrame = {
+      k0: Int = 60, r: Int = 4, nprobe: Int = 4): DataFrame = {
     val lex = StreamSearchIndex.search(spark, s"$stateDir/index", query, depth)
       .select(col("doc_id"), col("score"))
     val emb = liveVectors(spark, stateDir)
@@ -172,9 +170,10 @@ object StreamHybrid {
     val index = StreamIvfPq.currentIndex(spark, s"$stateDir/codes",
       template = throw new IllegalStateException(
         s"no committed code generation under $stateDir/codes"),
-      cells = Some(probes.map(_._2).distinct.sorted))
-    val dense = Similarity.refinedSearchIndex(emb, index, queries, depth,
-        r, nprobe, m, subDim, cent, book, probesPre = Some(probes))
+      cells = Some(probes.map(_.cellId).distinct.sorted))
+    val dense = Similarity.refinedSearchIndex(emb,
+        Similarity.IvfPqIndex(index, cent, book), queries, depth, r, nprobe,
+        probesPre = Some(probes))
       .select(col("vec_id").as("doc_id"), col("score"))
     TextAnalysis.rrfFuse(lex, dense, k, k0)
   }

@@ -8,7 +8,7 @@ import graft.operators.Similarity
 
 /** Continuous IVF-PQ index maintenance — the ANN sibling of
   * [[StreamNearDedup]]: arriving vectors are encoded with the LANDED
-  * trained quantizers ([[graft.operators.Similarity.landQuantizers]] —
+  * trained quantizers ([[graft.operators.Similarity.landedQuantizers]] —
   * the fixed coarse centroids + PQ codebook every batch must share, or
   * the codes aren't comparable) and appended to a disk-resident
   * inverted code list as batch-id-named generations, each PHYSICALLY
@@ -19,7 +19,7 @@ import graft.operators.Similarity
   * Per micro-batch:
   *
   *  1. encode the batch scan-side into (vec_id, sub, code) rows under
-  *     their coarse cell ([[Similarity.ivfPqIndexRows]]);
+  *     their coarse cell ([[Similarity.IvfPqIndex.build]]);
   *  2. land them as the batch's own generation `indexDir/gen-<id>`,
   *     `partitionBy("cell_id")` (idempotent Overwrite: a replayed batch
   *     rewrites byte-identically because the quantizers are landed
@@ -107,11 +107,10 @@ object StreamIvfPq extends Logging {
     * live in the rebuilt fold). Empty batches skip the write (a zero-row
     * partitionBy write lands no schema-bearing file). */
   def indexBatch(batch: DataFrame, indexDir: String, id: Long,
-      centroids: DataFrame, book: Seq[(Int, Int, Array[Double])],
-      m: Int = 8, subDim: Int = 8): Unit =
+      centroids: DataFrame, book: Similarity.Book): Unit =
     if (!batch.isEmpty) {
       val cent = currentCentroids(batch.sparkSession, indexDir, centroids)
-      Similarity.ivfPqIndexRows(batch, m, subDim, cent, book)
+      Similarity.IvfPqIndex.build(batch, cent, book).codes
         .write.mode(SaveMode.Overwrite).partitionBy("cell_id")
         .parquet(s"$indexDir/gen-$id")
     }
@@ -140,8 +139,7 @@ object StreamIvfPq extends Logging {
     * retrain input by the CALLER (pass live purged vectors) and from the
     * rebuilt rows here, so a re-shard is also a physical purge. */
   def reshard(spark: SparkSession, indexDir: String, vectors: DataFrame,
-      book: Seq[(Int, Int, Array[Double])], m: Int = 8, subDim: Int = 8,
-      fallbackCentroids: => DataFrame = null,
+      book: Similarity.Book, fallbackCentroids: => DataFrame = null,
       minGrowth: Double = 2.0, force: Boolean = false): Boolean = {
     val n = vectors.count()
     if (n == 0L) return false
@@ -179,7 +177,7 @@ object StreamIvfPq extends Logging {
       .localCheckpoint()
     Generations.replaceManifested(spark, indexDir,
       rebuilt = Retention.filter(
-        Similarity.ivfPqIndexRows(vectors, m, subDim, cent, book),
+        Similarity.IvfPqIndex.build(vectors, cent, book).codes,
         indexDir, "vec_id"),
       partitionCols = Seq("cell_id"),
       decorate = tmp => cent.write.mode(SaveMode.Overwrite)
@@ -247,8 +245,7 @@ object StreamIvfPq extends Logging {
     * the caller-supplied FIXED quantizers (landed artifacts — see the
     * corpus-dir convenience overload). */
   def start(vectors: DataFrame, indexDir: String, checkpoint: String,
-      centroids: DataFrame, book: Seq[(Int, Int, Array[Double])],
-      m: Int = 8, subDim: Int = 8,
+      centroids: DataFrame, book: Similarity.Book,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery = {
     vectors.writeStream
@@ -256,7 +253,7 @@ object StreamIvfPq extends Logging {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
-        indexBatch(batch, indexDir, id, centroids, book, m, subDim)
+        indexBatch(batch, indexDir, id, centroids, book)
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
           compactIndex(spark, indexDir)
         ()
@@ -271,29 +268,28 @@ object StreamIvfPq extends Logging {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery = {
     val (centroids, book) =
-      Similarity.loadLandedQuantizers(vectors.sparkSession, corpusDir)
+      Similarity.landedQuantizers(vectors.sparkSession, corpusDir)
     start(vectors, indexDir, checkpoint, centroids, book,
       trigger = trigger, compactEvery = compactEvery)
   }
 
   /** Top-k ADC search over everything the stream has landed so far —
-    * identical answer to the batch [[Similarity.topKPqIvfWith]] over the
+    * identical answer to the batch [[Similarity.searchIvfPqIndex]] over the
     * union of all arrived vectors (StreamIvfPqSpec pins that law,
     * cross-restart and across compaction cycles). The probe assignment
     * is collected first ([[Similarity.collectProbes]]) so the generation
     * read itself is pruned to the probed cells' partitions. */
   def search(spark: SparkSession, indexDir: String, queries: DataFrame,
-      centroids: DataFrame, book: Seq[(Int, Int, Array[Double])],
-      k: Int = 5, nprobe: Int = 4, m: Int = 8, subDim: Int = 8): DataFrame = {
+      centroids: DataFrame, book: Similarity.Book,
+      k: Int = 5, nprobe: Int = 4): DataFrame = {
     val cent = currentCentroids(spark, indexDir, centroids)
     val probes = Similarity.collectProbes(queries, cent, nprobe)
-    Similarity.searchIvfPqIndex(
-      currentIndex(spark, indexDir,
-        template = throw new IllegalStateException(
-          s"no committed index generation under $indexDir"),
-        cells = Some(probes.map(_._2).distinct.sorted)),
-      queries, k, nprobe, m, subDim, cent, book,
-      probesPre = Some(probes))
+    val codes = currentIndex(spark, indexDir,
+      template = throw new IllegalStateException(
+        s"no committed index generation under $indexDir"),
+      cells = Some(probes.map(_.cellId).distinct.sorted))
+    Similarity.searchIvfPqIndex(Similarity.IvfPqIndex(codes, cent, book),
+      queries, k, nprobe, probesPre = Some(probes))
   }
 
   /** [[search]] with the quantizers from the corpus dir's landed
@@ -301,12 +297,12 @@ object StreamIvfPq extends Logging {
   def searchFromLanded(spark: SparkSession, indexDir: String,
       queries: DataFrame, corpusDir: String, k: Int = 5,
       nprobe: Int = 4): DataFrame = {
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, corpusDir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, corpusDir)
     search(spark, indexDir, queries, centroids, book, k, nprobe)
   }
 
   // process-local memo of demo store roots, keyed by corpus dir (the
-  // loadLandedQuantizers convention: state is rebuilt once per process)
+  // landedQuantizers convention: state is rebuilt once per process)
   private var reshardStates = Map.empty[String, String]
 
   /** The re-shard life cycle as a batch-invokable CORRECTNESS entry
@@ -315,14 +311,14 @@ object StreamIvfPq extends Logging {
     * ([[indexBatch]], the exact per-batch body) — then [[reshard]] at
     * the √N production sizing and serve. The serve resolves the
     * re-shard's sidecar centroids, so the answer equals the batch
-    * √N-sized operator [[Similarity.topKPqIvfLandedScaled]] on the same
+    * √N-sized landed operator ([[Similarity.topKPqIvf]]) on the same
     * corpus — the entry SHARES that oracle (the landed ≡ direct law):
     * the store's history (built fixed, re-sharded later) is invisible to
     * the served answer, which is the whole point of the re-shard. */
   def reshardedDocs(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val (cent16, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (cent16, book) = Similarity.landedQuantizers(spark, dir)
     val state = synchronized {
       reshardStates.get(dir) match {
         case Some(s) => s

@@ -230,6 +230,6 @@ object StreamKnn {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
     start(vectors, stateDir, checkpoint,
-      Similarity.loadLandedQuantizers(vectors.sparkSession, corpusDir)._1,
+      Similarity.landedQuantizers(vectors.sparkSession, corpusDir)._1,
       nn, trigger, compactEvery)
 }

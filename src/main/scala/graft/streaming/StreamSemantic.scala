@@ -13,7 +13,7 @@ import graft.operators.{Dedup, Similarity}
   *
   *  1. probe: the batch's vectors assign to the FIXED trained cells
   *     (caller-supplied — typically the corpus dir's landed quantizer
-  *     artifact, [[graft.operators.Similarity.loadLandedQuantizers]]:
+  *     artifact, [[graft.operators.Similarity.landedQuantizers]]:
   *     every batch must share one quantizer or cells aren't comparable)
   *     and verify cosine ≥ τ against same-cell rows of the accumulated
   *     ASSIGNMENT INDEX on disk, plus smaller-id same-cell batch rows
@@ -113,7 +113,7 @@ object StreamSemantic {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0): StreamingQuery =
     start(vectors, indexDir, outDir, checkpoint,
-      Similarity.loadLandedQuantizers(vectors.sparkSession, corpusDir)._1,
+      Similarity.landedQuantizers(vectors.sparkSession, corpusDir)._1,
       tau, trigger, compactEvery)
 
   /** DRIFT monitor over the maintained gate — the streamed face of
@@ -128,7 +128,7 @@ object StreamSemantic {
     * counts once next to the quantizers and this becomes metadata-only. */
   def driftMonitor(spark: SparkSession, indexDir: String,
       corpusDir: String): DataFrame = {
-    val cent = Similarity.loadLandedQuantizers(spark, corpusDir)._1
+    val cent = Similarity.landedQuantizers(spark, corpusDir)._1
     val emb = graft.sources.Tables.load(spark, corpusDir, "embeddings")
       .select("vec_id", "embedding")
     // two-level assignment off the LANDED hier index, matching the

@@ -98,7 +98,7 @@ object UnifiedIngest {
     * text-only composition is unchanged. */
   def start(docs: DataFrame, stateDir: String, checkpoint: String,
       centroids: DataFrame, book: Seq[(Int, Int, Array[Double])],
-      tau: Double = 0.999, m: Int = 8, subDim: Int = 8,
+      tau: Double = 0.999,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0,
       mediaCol: Option[String] = None): StreamingQuery = {
@@ -223,7 +223,7 @@ object UnifiedIngest {
         // centroids ([[StreamIvfPq.currentCentroids]]), so batches after
         // a compactAll(reshardAnn) encode at the re-sized cells
         StreamIvfPq.indexBatch(vecs, s"$stateDir/codes", id,
-          centroids, book, m, subDim)
+          centroids, book)
         vecs.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/vecs/$own")
         Sketches.kmvSketch(landed, "source", "doc_id")
           .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/kmv/rows/$own")

@@ -159,4 +159,44 @@ class FunctionsSpec extends SparkTestBase {
       .select(explode(col("t")).as("p")).select("p.id").as[Long].collect().toSeq
     assert(top == Seq(2L, 3L))
   }
+
+  test("pq_codes / pq_cell reject a codebook subspace with no cells at construction") {
+    val ids = Array(Array(0L, 1L), Array.empty[Long])
+    val cents = Array(Array(Array(0.0, 1.0), Array(1.0, 0.0)), Array.empty[Array[Double]])
+    val enc = intercept[IllegalArgumentException](
+      GraftFunctions.pqCodes(col("e"), 2, ids, cents))
+    assert(enc.getMessage.contains("subspace 1 has no cells"), enc.getMessage)
+    val cell = intercept[IllegalArgumentException](
+      GraftFunctions.pqCell(col("s"), col("e"), ids, cents))
+    assert(cell.getMessage.contains("subspace 1 has no cells"), cell.getMessage)
+  }
+
+  test("pq_codes maps a null embedding to null codes") {
+    val ids = Array(Array(0L, 1L), Array(0L, 1L))
+    val cents = Array.fill(2)(Array(Array(0.0, 1.0), Array(1.0, 0.0)))
+    val got = Seq((1L, Some(Array(1f, 0f, 0f, 1f))), (2L, None))
+      .toDF("id", "e")
+      .select(col("id"), GraftFunctions.pqCodes(col("e"), 2, ids, cents).as("c"))
+      .as[(Long, Option[Seq[Long]])].collect().toMap
+    assert(got(1L).contains(Seq(1L, 0L)))
+    assert(got(2L).isEmpty, "a null embedding has no codes")
+  }
+
+  test("moment_sums fails clearly when a 128-bit sum exceeds decimal(38,0)") {
+    val agg = MomentSums(org.apache.spark.sql.catalyst.expressions.Literal(null))
+    val buf = agg.createAggregationBuffer()
+    buf.grow(1)
+    buf.cnt = 1
+    // 10^38 − 1 is the largest decimal(38,0): it still converts
+    def set(v: java.math.BigInteger): Unit = {
+      buf.pairHi(0) = v.shiftRight(64).longValue()
+      buf.pairLo(0) = v.longValue()
+    }
+    set(MomentSums.MaxDecimal38)
+    assert(agg.eval(buf) != null)
+    // one more needs 39 digits (still < 2^127, so the limbs hold it)
+    set(MomentSums.MaxDecimal38.add(java.math.BigInteger.ONE))
+    val e = intercept[ArithmeticException](agg.eval(buf))
+    assert(e.getMessage.contains("exceeds decimal(38,0)"), e.getMessage)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.operators.Similarity.{IvfPqSpec, Landed, Seeded, Trained}
 import org.apache.spark.sql.functions._
 
 /** Similarity search: brute-force top-k against an in-test Scala oracle,
@@ -199,7 +200,7 @@ class SimilaritySpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
-    val want = rows(Similarity.topKPqIvfTrained(spark, dir))
+    val want = rows(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Trained)))
     assert(rows(Similarity.topKPqIvfSteady(spark, dir)) == want)
     assert(rows(Similarity.topKPqIvfSteady(spark, dir)) == want) // memoized call
   }
@@ -208,10 +209,10 @@ class SimilaritySpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
-    val want = rows(Similarity.topKPqIvfTrained(spark, dir))
+    val want = rows(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Trained)))
     // landed serve path — first call lands on a fresh catalog, later
     // calls (and a restarted process on the same catalog) read the tables
-    assert(rows(Similarity.topKPqIvfLanded(spark, dir)) == want)
+    assert(rows(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Landed))) == want)
     assert(rows(Similarity.topKPqIvfSteady(spark, dir)) == want)
     // both artifact tables exist as durable catalog parquet tables
     val prefix = Similarity.quantizerPrefix(dir)
@@ -220,14 +221,14 @@ class SimilaritySpec extends SparkTestBase {
     // the landed book round-trips bit-exactly vs a fresh training
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val landedBook = Similarity.loadLandedQuantizers(spark, dir)._2
+    val landedBook = Similarity.landedQuantizers(spark, dir)._2
     val freshBook = Similarity.pqCodebookTrained(emb)
     assert(landedBook.map(t => (t._1, t._2, t._3.toSeq)) ==
       freshBook.map(t => (t._1, t._2, t._3.toSeq)))
     // landed centroids ≡ a fresh kmeansCentroidsAuto run (round 16: the
     // k∝N landed family trains through the size dispatch — flat at this
     // fixture's seed count, hier above the pinned crossover)
-    val landedCents = Similarity.loadLandedQuantizers(spark, dir)._1
+    val landedCents = Similarity.landedQuantizers(spark, dir)._1
       .as[(Long, Array[Float])].collect().map(t => (t._1, t._2.toSeq)).toSet
     val freshCents = Similarity.kmeansCentroidsAuto(emb)
       .as[(Long, Array[Float])].collect().map(t => (t._1, t._2.toSeq)).toSet
@@ -248,7 +249,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("topKPqIvfTrained: k per query, scores from the trained book's ADC range") {
     val dir = "/root/testdata/sf0.001"
-    val rows = Similarity.topKPqIvfTrained(spark, dir)
+    val rows = Similarity.topKPqIvf(spark, dir, IvfPqSpec(Trained))
       .as[(Long, Long, Double)].collect().toSeq
     val perQuery = rows.groupBy(_._1)
     assert(perQuery.keySet == Similarity.defaultProbeIds.toSet)
@@ -293,8 +294,9 @@ class SimilaritySpec extends SparkTestBase {
     val queries = Seq((0L, corpus(0)._2)).toDF("query_id", "q_emb")
     val cents = Similarity.defaultCentroids(emb)
     val book = Similarity.pqCodebook(4, 8, 8)
-    val refined = Similarity.topKPqIvfRefined(emb, queries, k = 3, r = 4,
-        nprobe = 2, m = 4, subDim = 8, cents, book)
+    val index = Similarity.IvfPqIndex.build(emb, cents, book)
+    val refined = Similarity.refinedSearchIndex(emb, index, queries, k = 3,
+        r = 4, nprobe = 2)
       .as[(Long, Long, Double)].collect()
     assert(refined.length == 3)
     // every returned score is the true cosine, not the ADC approximation
@@ -302,7 +304,7 @@ class SimilaritySpec extends SparkTestBase {
       assert(math.abs(s - cosine(corpus(q.toInt)._2, corpus(v.toInt)._2)) < 1e-12)
     }
     // and the ids are exactly the exact-cosine rank of the stage-1 cut
-    val cand = Similarity.topKPqIvfWith(emb, queries, 12, 2, 4, 8, cents, book)
+    val cand = Similarity.searchIvfPqIndex(index, queries, 12, nprobe = 2)
       .select("vec_id").as[Long].collect().toSet
     val want = corpus.filter(c => cand.contains(c._1))
       .map { case (id, v) => (id, cosine(corpus(0)._2, v)) }
@@ -317,8 +319,9 @@ class SimilaritySpec extends SparkTestBase {
     val book = Similarity.pqCodebook(4, 8, 8)
     // k·r ≥ corpus: stage 1 keeps every probed-cell candidate, so the
     // re-rank IS the true-cosine IVF search over the same probes
-    val wide = Similarity.topKPqIvfRefined(emb, queries, k = 3, r = 30,
-        nprobe = 2, m = 4, subDim = 8, cents, book)
+    val wide = Similarity.refinedSearchIndex(emb,
+        Similarity.IvfPqIndex.build(emb, cents, book), queries, k = 3,
+        r = 30, nprobe = 2)
       .as[(Long, Long, Double)].collect().toSet
     val ivf = Similarity.topKCosineIvf(emb, queries, k = 3, nprobe = 2)
       .as[(Long, Long, Double)].collect().toSet
@@ -333,8 +336,9 @@ class SimilaritySpec extends SparkTestBase {
       val got = df.select("query_id", "vec_id").as[(Long, Long)].collect().toSet
       (got & exact).size.toDouble / exact.size
     }
-    val plain = recall(Similarity.topKPqIvf(spark, dir))
-    val refined = recall(Similarity.topKPqIvfRefined(spark, dir))
+    val plain = recall(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Seeded)))
+    val refined = recall(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Seeded),
+      refine = Some(4)))
     assert(refined >= plain,
       s"refine must not lose recall: $refined < $plain")
   }
@@ -343,11 +347,12 @@ class SimilaritySpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val want = Similarity.topKPqIvfRefined(emb, Similarity.defaultQueries(emb),
-        k = 5, r = 4, nprobe = 4, m = 8, subDim = 8,
-        Similarity.kmeansCentroidsAuto(emb), Similarity.pqCodebookTrained(emb))
+    val index = Similarity.IvfPqIndex.build(emb,
+      Similarity.kmeansCentroidsAuto(emb), Similarity.pqCodebookTrained(emb))
+    val want = Similarity.refinedSearchIndex(emb, index,
+        Similarity.defaultQueries(emb), k = 5, r = 4)
       .as[(Long, Long, Double)].collect().toSet
-    assert(Similarity.topKPqIvfRefinedLanded(spark, dir)
+    assert(Similarity.topKPqIvf(spark, dir, IvfPqSpec(Landed), refine = Some(4))
       .as[(Long, Long, Double)].collect().toSet == want)
   }
 
@@ -401,22 +406,21 @@ class SimilaritySpec extends SparkTestBase {
     val k = truth.size
     val resid = Similarity.residuals(emb, cents)
     val bookRes = Similarity.pqCodebookTrained(resid.select("vec_id", "embedding"))
-    val resErr = errOf(Similarity.searchIvfPqResIndex(
-      Similarity.ivfPqResIndexRows(resid, 8, 8, bookRes),
-      queries, k, nCells, 8, 8, cents, bookRes))
+    val resErr = errOf(Similarity.searchIvfPqIndex(
+      Similarity.IvfPqIndex.build(emb, cents, bookRes, residual = true),
+      queries, k, nCells))
     val bookRaw = Similarity.pqCodebookTrained(emb)
     val rawErr = errOf(Similarity.searchIvfPqIndex(
-      Similarity.ivfPqIndexRows(emb, 8, 8, cents, bookRaw),
-      queries, k, nCells, 8, 8, cents, bookRaw))
+      Similarity.IvfPqIndex.build(emb, cents, bookRaw), queries, k, nCells))
     assert(resErr < rawErr,
       s"residual encoding must cut ADC error: residual $resErr vs raw $rawErr")
   }
 
   test("topKPqIvfResLanded equals the residual retrain, serves bucket-pruned") {
     val dir = "/root/testdata/sf0.001"
-    val want = Similarity.topKPqIvfResTrained(spark, dir)
+    val want = Similarity.topKPqIvf(spark, dir, IvfPqSpec(Trained, residual = true))
       .as[(Long, Long, Double)].collect().toSet
-    val served = Similarity.topKPqIvfResLanded(spark, dir)
+    val served = Similarity.topKPqIvf(spark, dir, IvfPqSpec(Landed, residual = true))
     assert(served.as[(Long, Long, Double)].collect().toSet == want)
     // the landed residual code table serves through a bucket-pruned scan
     served.collect()
@@ -537,7 +541,7 @@ class SimilaritySpec extends SparkTestBase {
         }
       top <- scored.sortBy { case (vid, sc) => (-sc, vid) }.take(k)
     } yield (qid, top._1, top._2)).toSet
-    val got = Similarity.topKPqIvf(spark, dir)
+    val got = Similarity.topKPqIvf(spark, dir, IvfPqSpec(Seeded))
       .as[(Long, Long, Double)].collect().toSet
     assert(got == want)
   }
@@ -633,7 +637,7 @@ class SimilaritySpec extends SparkTestBase {
       }.sum / qIds.size
     }
     val seeded = recall(Similarity.topKPq(emb, queries, k, m, kc, subDim))
-    val trained = recall(Similarity.topKPqWithBook(emb, queries, k, m, subDim, trainedBook))
+    val trained = recall(Similarity.topKPqWithBook(emb, queries, k, trainedBook))
     assert(trained >= seeded, s"trained recall $trained < seeded $seeded")
   }
 
@@ -661,13 +665,13 @@ class SimilaritySpec extends SparkTestBase {
 
   test("annRecall counts the per-query overlap of IVF-PQ against exact cosine") {
     val dir = "/root/testdata/sf0.001"
-    val got = Similarity.annRecall(spark, dir)
+    val got = Similarity.annRecall(spark, dir, IvfPqSpec(Seeded))
       .as[(Long, Long, Double)].collect()
       .map { case (q, n, r) => q -> ((n, r)) }.toMap
     // every probe query reports, even at zero overlap
     assert(got.keySet == Similarity.defaultProbeIds.toSet)
     // ground truth: recompute the overlap from the two search operators
-    val ann = Similarity.topKPqIvf(spark, dir, 5)
+    val ann = Similarity.topKPqIvf(spark, dir, IvfPqSpec(Seeded), 5)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     val exact = Similarity.topKCosine(spark, dir, 5)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
@@ -1001,5 +1005,41 @@ class SimilaritySpec extends SparkTestBase {
       val orth = (0 until 3).map(k => u(k)(i) * u(k)(j)).sum
       assert(math.abs(orth - (if (i == j) 1.0 else 0.0)) < 1e-9, "U orthonormal")
     }
+  }
+
+  test("overlapJobs: a failing main is rethrown while the side chain hangs") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val boom = new IllegalStateException("main failed")
+    try {
+      // bounded so a regression fails instead of hanging the suite
+      val e = failAfter(60.seconds) {
+        intercept[IllegalStateException] {
+          Similarity.overlapJobs(spark)(release.await())(throw boom)
+        }
+      }
+      assert(e eq boom)
+    } finally release.countDown()
+  }
+
+  test("overlapJobs: main's exception carries the side's failure as suppressed") {
+    val mainFailed = new java.util.concurrent.CountDownLatch(1)
+    val sideErr = new RuntimeException("side failed")
+    val e = intercept[IllegalStateException] {
+      Similarity.overlapJobs(spark) {
+        mainFailed.await(); throw sideErr
+      } {
+        mainFailed.countDown(); throw new IllegalStateException("main failed")
+      }
+    }
+    assert(e.getMessage == "main failed")
+    assert(e.getSuppressed.toSeq == Seq(sideErr))
+    // a side failure after a successful main is rethrown as is
+    val s = intercept[RuntimeException](
+      Similarity.overlapJobs(spark)(throw sideErr)(1))
+    assert(s eq sideErr)
   }
 }

@@ -877,9 +877,9 @@ class TextAnalysisSpec extends SparkTestBase {
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val (centDf, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centDf, book) = Similarity.landedQuantizers(spark, dir)
     val want = TextAnalysis.hybridSearchCompressed(docs, emb,
-        Similarity.ivfPqIndexRows(emb, 8, 8, centDf, book), centDf, book,
+        Similarity.IvfPqIndex.build(emb, centDf, book),
         "doc_id", "text", TextAnalysis.searchQuery, queryVecId = 0L)
       .as[(Long, Double)].collect().toSeq
     val got = TextAnalysis.hybridDocsSteady(spark, dir)

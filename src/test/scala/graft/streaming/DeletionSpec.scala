@@ -123,7 +123,7 @@ class DeletionSpec extends SparkTestBase {
   test("IVF-PQ code list: post-delete search equals batch search on the remaining vectors") {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, dir)
     val all = emb.as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
     val batches = (0 to 2).map(i => all.filter(_._1 % 3 == i))
     val tmp = Files.createTempDirectory("graft_del_ivfpq_").toString
@@ -141,8 +141,9 @@ class DeletionSpec extends SparkTestBase {
       StreamIvfPq.search(spark, indexDir, queries, centroids, book)
         .as[(Long, Long, Double)].collect().toSet
     def want(corpus: Seq[(Long, Array[Float])]): Set[(Long, Long, Double)] =
-      Similarity.topKPqIvfWith(corpus.toDF("vec_id", "embedding"), queries,
-        k = 5, nprobe = 4, m = 8, subDim = 8, centroids, book)
+      Similarity.searchIvfPqIndex(Similarity.IvfPqIndex.build(
+          corpus.toDF("vec_id", "embedding"), centroids, book), queries,
+        k = 5, nprobe = 4)
         .as[(Long, Long, Double)].collect().toSet
 
     // delete enough near neighbors of vec 0 that the top-5 must change:
@@ -252,7 +253,7 @@ class DeletionSpec extends SparkTestBase {
     val ids = docs.keySet.intersect(embs.keySet).toSeq.sorted.take(24)
     val all = ids.map(i =>
       (i, docs(i), embs(i), if (i % 2 == 0) "even" else "odd"))
-    val (centDf, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centDf, book) = Similarity.landedQuantizers(spark, dir)
     val tmp = Files.createTempDirectory("graft_del_sketch_").toString
     val (state, ckpt) = (s"$tmp/state", s"$tmp/ckpt")
     val input = MemoryStream[(Long, String, Array[Float], String)](
@@ -318,7 +319,7 @@ class DeletionSpec extends SparkTestBase {
     val ids = docs.keySet.intersect(embs.keySet).toSeq.sorted
     val all = ids.map(i => (i, docs(i), embs(i)))
     val q = TextAnalysis.searchQuery
-    val (centDf, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centDf, book) = Similarity.landedQuantizers(spark, dir)
     val tmp = Files.createTempDirectory("graft_del_hybrid_").toString
     val (state, ckpt) = (s"$tmp/state", s"$tmp/ckpt")
     val input = MemoryStream[(Long, String, Array[Float])](
@@ -345,8 +346,8 @@ class DeletionSpec extends SparkTestBase {
     val embDf = remaining.map(t => (t._1, t._3)).toDF("vec_id", "embedding")
     val wantSteady = TextAnalysis.hybridSearchCompressed(
         remaining.map(t => (t._1, t._2)).toDF("doc_id", "text"), embDf,
-        Similarity.ivfPqIndexRows(embDf, 8, 8, centDf, book),
-        centDf, book, "doc_id", "text", q, queryVecId = 0L)
+        Similarity.IvfPqIndex.build(embDf, centDf, book),
+        "doc_id", "text", q, queryVecId = 0L)
       .as[(Long, Double)].collect().toSeq
     assert(StreamHybrid.searchSteady(spark, state, q, queryVecId = 0L,
         centDf, book).as[(Long, Double)].collect().toSeq == wantSteady,

@@ -85,7 +85,7 @@ class StreamHybridSpec extends SparkTestBase {
     // FIXED quantizers shared by every batch and both sides of the law —
     // the landed trained artifacts of the fixture corpus
     val (centDf, book) =
-      graft.operators.Similarity.loadLandedQuantizers(spark, dir)
+      graft.operators.Similarity.landedQuantizers(spark, dir)
     val batches = (0 to 3).map(i => all.filter(_._1 % 4 == i))
     val tmp = Files.createTempDirectory("graft_shybrid_steady_").toString
     val (state, ckpt) = (s"$tmp/state", s"$tmp/ckpt")
@@ -104,8 +104,8 @@ class StreamHybridSpec extends SparkTestBase {
       val embDf = c.map(t => (t._1, t._3)).toDF("vec_id", "embedding")
       TextAnalysis.hybridSearchCompressed(
           c.map(t => (t._1, t._2)).toDF("doc_id", "text"), embDf,
-          graft.operators.Similarity.ivfPqIndexRows(embDf, 8, 8, centDf, book),
-          centDf, book, "doc_id", "text", q, queryVecId = 0L)
+          graft.operators.Similarity.IvfPqIndex.build(embDf, centDf, book),
+          "doc_id", "text", q, queryVecId = 0L)
         .as[(Long, Double)].collect().toSeq
     }
 

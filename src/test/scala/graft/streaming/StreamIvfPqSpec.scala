@@ -8,7 +8,7 @@ import graft.operators.Similarity
 
 /** Streaming IVF-PQ index maintenance: after any sequence of arrival
   * batches — across restarts and hook-driven compaction cycles — search
-  * over the landed code list equals the batch topKPqIvfWith on the union
+  * over the landed code list equals the batch searchIvfPqIndex on the union
   * of everything that arrived.
   */
 class StreamIvfPqSpec extends SparkTestBase {
@@ -20,7 +20,7 @@ class StreamIvfPqSpec extends SparkTestBase {
       .select("vec_id", "embedding")
     // fixed quantizers: the corpus dir's landed artifacts (trained+landed
     // on first use; every batch and the batch-side oracle share them)
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, dir)
     val all = emb.as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
     // four arrival batches, each in its own restarted query, compaction
     // hooked every 2nd batch id (a fold needs >1 settled source, so the
@@ -43,9 +43,9 @@ class StreamIvfPqSpec extends SparkTestBase {
       StreamIvfPq.search(spark, indexDir, queries(qIds), centroids, book)
         .as[(Long, Long, Double)].collect().toSet
     def batchWant(corpus: Seq[(Long, Array[Float])], qIds: Seq[Long]): Set[(Long, Long, Double)] =
-      Similarity.topKPqIvfWith(
-        corpus.toDF("vec_id", "embedding"), queries(qIds),
-        k = 5, nprobe = 4, m = 8, subDim = 8, centroids, book)
+      Similarity.searchIvfPqIndex(Similarity.IvfPqIndex.build(
+          corpus.toDF("vec_id", "embedding"), centroids, book),
+        queries(qIds), k = 5, nprobe = 4)
         .as[(Long, Long, Double)].collect().toSet
 
     val probeIds = Similarity.defaultProbeIds
@@ -106,7 +106,7 @@ class StreamIvfPqSpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val (cent16, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (cent16, book) = Similarity.landedQuantizers(spark, dir)
     val all = emb.as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
     val batches = (0 to 3).map(i => all.filter(_._1 % 4 == i))
     val tmp = Files.createTempDirectory("graft_sivfpq_rs_").toString
@@ -131,8 +131,9 @@ class StreamIvfPqSpec extends SparkTestBase {
         corpus: Seq[(Long, Array[Float])], qIds: Seq[Long]): Set[(Long, Long, Double)] = {
       val cent = Similarity.kmeansCentroids(trainOn.toDF("vec_id", "embedding"),
         initEvery = Similarity.scaledInitEvery(trainOn.size.toLong))
-      Similarity.topKPqIvfWith(corpus.toDF("vec_id", "embedding"),
-        queries(qIds), k = 5, nprobe = 4, m = 8, subDim = 8, cent, book)
+      Similarity.searchIvfPqIndex(Similarity.IvfPqIndex.build(
+          corpus.toDF("vec_id", "embedding"), cent, book),
+        queries(qIds), k = 5, nprobe = 4)
         .as[(Long, Long, Double)].collect().toSet
     }
     val probeIds = Similarity.defaultProbeIds
@@ -207,7 +208,8 @@ class StreamIvfPqSpec extends SparkTestBase {
     // (the law the sim_topk_ivfpq_reshard CORRECTNESS entry rides)
     val demo = StreamIvfPq.reshardedDocs(spark, dir)
       .as[(Long, Long, Double)].collect().toSet
-    val want = Similarity.topKPqIvfLandedScaled(spark, dir)
+    val want = Similarity.topKPqIvf(spark, dir,
+        Similarity.IvfPqSpec(Similarity.Landed, scaled = true))
       .as[(Long, Long, Double)].collect().toSet
     assert(demo == want,
       "reshardedDocs must equal the batch √N-sized landed serve")

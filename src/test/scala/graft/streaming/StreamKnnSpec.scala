@@ -18,7 +18,7 @@ class StreamKnnSpec extends SparkTestBase {
     val all = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding").as[(Long, Array[Float])]
       .collect().toSeq.sortBy(_._1)
-    val cents = Similarity.loadLandedQuantizers(spark, dir)._1
+    val cents = Similarity.landedQuantizers(spark, dir)._1
     val nn = 4
     val batches = (0 to 3).map(i => all.filter(_._1 % 4 == i))
     val tmp = Files.createTempDirectory("graft_sknn_").toString

@@ -19,7 +19,7 @@ class StreamSemanticSpec extends SparkTestBase {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-    val centroids = Similarity.loadLandedQuantizers(spark, dir)._1
+    val centroids = Similarity.landedQuantizers(spark, dir)._1
     val base = emb.as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
       .filter(_._2.exists(_ != 0f)) // zero vectors have no cosine — keep them out
     def scaled(rows: Seq[(Long, Array[Float])], off: Long) =
@@ -97,7 +97,7 @@ class StreamSemanticSpec extends SparkTestBase {
     input.addData(halves(0): _*); runOnce()
     input.addData(halves(1): _*); runOnce()
 
-    val cent = graft.operators.Similarity.loadLandedQuantizers(spark, dir)._1
+    val cent = graft.operators.Similarity.landedQuantizers(spark, dir)._1
     import org.apache.spark.sql.functions.{count => fcount, lit => flit}
     // both slices through the TWO-LEVEL assignment — the gate lands hier
     // cells (round-14 adoption), and the monitor law is "same binning

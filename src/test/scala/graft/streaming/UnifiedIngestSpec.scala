@@ -32,7 +32,7 @@ class UnifiedIngestSpec extends SparkTestBase {
       case (id, text, src) if embs.contains(id) => (id, text, embs(id), src)
     }
     assert(base.exists(_._1 == 0L), "probe vector 0 must exist")
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, dir)
 
     // planted duplicate classes, each arriving AFTER its original:
     def tokens(t: String): Seq[String] =
@@ -173,9 +173,9 @@ class UnifiedIngestSpec extends SparkTestBase {
       .select(col("doc_id").as("query_id"), col("embedding").as("q_emb"))
     assert(UnifiedIngest.searchAnn(spark, state, queries, centroids, book)
       .as[(Long, Long, Double)].collect().toSet ==
-      Similarity.topKPqIvfWith(
+      Similarity.searchIvfPqIndex(Similarity.IvfPqIndex.build(
           admDf.select(col("doc_id").as("vec_id"), col("embedding")),
-          queries, k = 5, nprobe = 4, m = 8, subDim = 8, centroids, book)
+          centroids, book), queries, k = 5, nprobe = 4)
         .as[(Long, Long, Double)].collect().toSet, "ADC serve")
 
     assert(UnifiedIngest.kmvEstimates(spark, state)
@@ -282,8 +282,9 @@ class UnifiedIngestSpec extends SparkTestBase {
       initEvery = Similarity.scaledInitEvery(remaining.count()))
     assert(UnifiedIngest.searchAnn(spark, state, queries, centroids, book)
       .as[(Long, Long, Double)].collect().toSet ==
-      Similarity.topKPqIvfWith(liveVecRows, queries,
-          k = 5, nprobe = 4, m = 8, subDim = 8, scaledCent, book)
+      Similarity.searchIvfPqIndex(
+          Similarity.IvfPqIndex.build(liveVecRows, scaledCent, book), queries,
+          k = 5, nprobe = 4)
         .as[(Long, Long, Double)].collect().toSet,
       "re-sharded ADC serve must equal batch at the √N sizing")
   }
@@ -315,7 +316,7 @@ class UnifiedIngestSpec extends SparkTestBase {
       "totally unrelated payload bytes that hash far away".getBytes("UTF-8"))
     val batches = Seq(b0, base.drop(10) ++ Seq(nearCopy, fresh))
 
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, dir)
     val tmp = Files.createTempDirectory("graft_unified_media_").toString
     val (state, ckpt) = (s"$tmp/state", s"$tmp/ckpt")
     val input = MemoryStream[MArrival](
@@ -380,7 +381,7 @@ class UnifiedIngestSpec extends SparkTestBase {
     val base: Seq[Arrival] = rows.collect {
       case (id, text, src) if embs.contains(id) => (id, text, embs(id), src)
     }.take(30)
-    val (centroids, book) = Similarity.loadLandedQuantizers(spark, dir)
+    val (centroids, book) = Similarity.landedQuantizers(spark, dir)
     val dup = (base.head._1 + 1000000L, base.head._2,
       base.head._3, base.head._4) // verbatim re-arrival, higher id
     val batches = Seq(base.take(10), base.slice(10, 20),
