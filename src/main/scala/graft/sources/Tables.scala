@@ -1,8 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -13,6 +22,14 @@ import org.apache.spark.sql.types.LongType
   * predicate pushdown + column pruning for free — at 100 TB the scan cost
   * is dominated by how few bytes we can get away with reading, so every
   * query below should show PushedFilters / narrow ReadSchema in explain().
+  *
+  * Loading runs no Spark job. A bare `spark.read.parquet(p)` starts a
+  * one-task schema-inference job on every call just to read one footer;
+  * `footerSchema` reads that footer on the driver instead and hands the
+  * result to `spark.read.schema(_).parquet(p)`. The schema is the one
+  * Spark's inference returns (its footer logic, which is `private[parquet]`,
+  * is mirrored here), read afresh on every load: a rewritten file is seen
+  * at once, and there is no schema copy that could drift from the files.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -22,7 +39,8 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(path(dir, name))
+    val p = path(dir, name)
+    val df = spark.read.schema(footerSchema(spark, p)).parquet(p)
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads with
     // spark.sql.legacy.parquet.nanosAsLong=true (set in our sessions) as a
     // raw long. Convert to a proper timestamp here; integer DIV, not /1000.0
@@ -31,6 +49,71 @@ object Tables {
       df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
     else df
   }
+
+  /** The data schema `spark.read.parquet(p)` would infer, read on the
+    * driver from the footer of `p`'s first data file. As in Spark's
+    * inference with `mergeSchema` off (its default):
+    *   - the first data file is the least by full path among the files
+    *     Spark lists — names starting `_` (unless they hold `=`, as
+    *     partition directories may) or `.`, and `._COPYING_` files are
+    *     skipped, subdirectories are recursed into; partition columns are
+    *     not in the footer, Spark appends them from the `k=v` directories;
+    *     summary files (`_metadata`, which Spark no longer writes) are not
+    *     consulted;
+    *   - the footer's Spark row metadata (the writer's schema JSON) wins;
+    *     without it, or if it does not parse, the parquet schema goes
+    *     through Spark's converter under the session's parquet flags (so
+    *     `nanosAsLong` still turns TIMESTAMP(NANOS) into a long).
+    * A missing path fails as `spark.read` does (`PATH_NOT_FOUND`); no data
+    * file and an unreadable footer fail naming the path. */
+  private def footerSchema(spark: SparkSession, p: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(p)
+    val fs = root.getFileSystem(conf)
+    val qualified = fs.makeQualified(root).toString
+    val status =
+      try fs.getFileStatus(root)
+      catch {
+        case _: FileNotFoundException =>
+          throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> qualified))
+      }
+    val file = firstDataFile(fs, status).getOrElse(throw new AnalysisException(
+      "UNABLE_TO_INFER_SCHEMA", Map("format" -> s"Parquet at $qualified (no data file)")))
+    val meta =
+      try ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+      catch {
+        case e: RuntimeException => throw new SparkException(
+          "FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER", Map("path" -> file.getPath.toString), e)
+      }
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+      .getOrElse {
+        val c = spark.sessionState.conf
+        // the flags Spark's own schema inference passes; the rest stay default
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = c.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+          nanosAsLong = c.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+          .convert(meta.getSchema)
+      }
+  }
+
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** Depth-first over name-ordered children, a directory keyed by its name
+    * plus `/`: the first file reached is the least full path, the order
+    * Spark sorts its listed files in before taking the head. */
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (!st.isDirectory) Some(st)
+    else fs.listStatus(st.getPath)
+      .filterNot(c => hidden(c.getPath.getName))
+      .sortBy(c => if (c.isDirectory) c.getPath.getName + "/" else c.getPath.getName)
+      .iterator.flatMap(firstDataFile(fs, _)).nextOption()
 
   /** Register every table as a temp view so both the DataFrame and the
     * spark.sql entry points (reference entry point C, SURVEY §3.3) work. */

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +13,33 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * Listener events arrive asynchronously, so after `body` one marker job
+    * is run and awaited: the bus delivers in order, so once the marker's
+    * start is seen every earlier job start has been counted. The marker
+    * itself is not counted. */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val markerKey = "graft.test.jobsDuring.marker"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerKey) != null))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(markerKey, "1")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(markerKey, null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {
