@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 
 /** Beyond-reference analytics over the TPC-H-ish tables: the join /
   * per-group-top-k / distinct-counting shapes any consumer of the landed
@@ -766,40 +766,20 @@ object Analytics {
     histQuantiles(dailyValueHistograms(Tables.load(spark, dir, "events")),
       histFrom, histTo, histPs)
 
-  /** Land the daily histogram table PARTITIONED BY day, so a range
-    * serve's day filter prunes partitions at the file index — the scan
-    * reads only the covered days' files (the landSearchIndex /
-    * landedQuantizers landed-artifact discipline). */
-  def landDailyHistograms(events: DataFrame, prefix: String, path: String,
-      width: Double = 25.0, bins: Int = 20): Unit =
-    dailyValueHistograms(events, width, bins)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .partitionBy("day")
-      .option("path", s"$path/hist").saveAsTable(s"${prefix}_hist")
-
-  /** Catalog table-name prefix for a corpus dir's landed histograms (the
-    * searchIndexPrefix convention). */
-  def histPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"hist_steady_$suffix"
-  }
-
-  private def ensureHistograms(spark: SparkSession, dir: String): Unit = {
-    val prefix = histPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
-      Seq(s"${prefix}_hist")) { path =>
-      landDailyHistograms(Tables.load(spark, dir, "events"), prefix, path)
-    }
-  }
-
   /** STEADY-STATE [[histQuantilesEvents]]: serve the range quantiles from
     * the landed day-partitioned table — the timed cost is the pruned
     * metadata-scale serve, raw events never read. Same answer, same
-    * oracle. */
+    * oracle. The table lands PARTITIONED BY day, so a range serve's day
+    * filter prunes partitions at the file index — the scan reads only
+    * the covered days' files. */
   def histQuantilesSteady(spark: SparkSession, dir: String): DataFrame = {
-    ensureHistograms(spark, dir)
-    histQuantiles(spark.table(s"${histPrefix(dir)}_hist"),
-      histFrom, histTo, histPs)
+    val prefix = Landing.key("hist_steady", dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_hist")) { path =>
+      dailyValueHistograms(Tables.load(spark, dir, "events"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
+        .partitionBy("day")
+        .option("path", s"$path/hist").saveAsTable(s"${prefix}_hist")
+    }
+    histQuantiles(spark.table(s"${prefix}_hist"), histFrom, histTo, histPs)
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 
 /** Deterministic negative-pair sampling for contrastive training data —
   * "give every document m pseudo-random partners from elsewhere in the
@@ -144,40 +144,26 @@ object Contrastive {
   }
 
   /** Catalog table name for the LANDED near-dup component state of one
-    * corpus dir — MD5 of the dir (the steadyIndexPrefix collision
-    * rationale: a 31-bit `String.hashCode` clash between two corpus dirs
-    * would silently pair against the wrong clusters). */
-  def prefComponentsTable(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"prefcc_$suffix"
-  }
-
-  /** Land-or-load the near-dup COMPONENT table for the planted corpus:
-    * the CC closure is deterministic from the banded pair set, so
-    * landing changes no answer — it amortizes the star rounds (the
-    * operator's cost ceiling) to the first call, exactly like the
-    * near-dup index generations land their band state. */
-  def ensurePrefComponents(spark: SparkSession, dir: String): DataFrame = {
-    val table = prefComponentsTable(dir)
-    graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
-      val docs = Dedup.plantedNearDocs(spark, dir)
-      Dedup.connectedComponents(Dedup.minhashLshPairs(docs, "doc_id", "text"))
-        .withColumnRenamed("node", "doc_id")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/prefcc").saveAsTable(table)
-    }
-    spark.table(table)
-  }
+    * corpus dir. */
+  def prefComponentsTable(dir: String): String = Landing.key("prefcc", dir)
 
   /** STEADY-STATE [[docPreferencePairs]]: pairs served off the LANDED
     * component table — no shingling, no banded join, no CC star rounds
     * in the timed plan; the serve is one docs→component equi-join and
-    * one per-component two-phase aggregate. Same components (the
-    * closure is deterministic), same answer, same oracle as the direct
-    * entry. */
-  def docPreferencePairsSteady(spark: SparkSession, dir: String): DataFrame =
-    preferencePairsWith(Dedup.plantedNearDocs(spark, dir),
-      ensurePrefComponents(spark, dir),
+    * one per-component two-phase aggregate. The CC closure is
+    * deterministic from the banded pair set, so landing changes no
+    * answer — it amortizes the star rounds (the operator's cost
+    * ceiling) to the first call. Same components, same answer, same
+    * oracle as the direct entry. */
+  def docPreferencePairsSteady(spark: SparkSession, dir: String): DataFrame = {
+    val table = prefComponentsTable(dir)
+    Landing.ensureLanded(spark, table, Seq(table)) { path =>
+      val docs = Dedup.plantedNearDocs(spark, dir)
+      Landing.saveTable(
+        Dedup.connectedComponents(Dedup.minhashLshPairs(docs, "doc_id", "text"))
+          .withColumnRenamed("node", "doc_id"), table, s"$path/prefcc")
+    }
+    preferencePairsWith(Dedup.plantedNearDocs(spark, dir), spark.table(table),
       "doc_id", length(col("text")).cast("long"))
+  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 import org.apache.spark.internal.Logging
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -308,18 +308,13 @@ object Dedup extends Logging {
     * bench tripwire watches changes. The first call (Bench's unmeasured
     * warm-up pass, Verify's only pass) pays the land. */
   /** Catalog table-name prefix for [[incrementalNearArrivalsSteady]]'s
-    * landed index: MD5 of the dir, not String.hashCode — a 31-bit
-    * collision between two corpus dirs would silently probe the wrong
-    * index. Public so the layout spec pins the same naming scheme. */
-  def steadyIndexPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"neardup_steady_$suffix"
-  }
+    * landed index. Public so the layout spec pins the same naming
+    * scheme. */
+  def steadyIndexPrefix(dir: String): String = Landing.key("neardup_steady", dir)
 
   def incrementalNearArrivalsSteady(spark: SparkSession, dir: String): DataFrame = {
     val prefix = steadyIndexPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
+    Landing.ensureLanded(spark, prefix,
       Seq(s"${prefix}_bands", s"${prefix}_sh")) { path =>
       val corpus = Tables.load(spark, dir, "documents")
         .select("doc_id", "text").filter(col("doc_id") % 4 =!= 1)
@@ -763,13 +758,8 @@ object Dedup extends Logging {
     out
   }
 
-  /** Catalog table-name prefix for the landed containment index (the
-    * [[steadyIndexPrefix]] naming scheme). */
-  def steadyContainPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"contain_steady_$suffix"
-  }
+  /** Catalog table-name prefix for the landed containment index. */
+  def steadyContainPrefix(dir: String): String = Landing.key("contain_steady", dir)
 
   /** STEADY-STATE [[incrementalContainArrivals]]: probes the LANDED
     * shingle-bucketed posting table — no corpus re-shingling, and the
@@ -777,7 +767,7 @@ object Dedup extends Logging {
     * bucket-aligned on `shingle`). Same answer, same oracle. */
   def incrementalContainArrivalsSteady(spark: SparkSession, dir: String): DataFrame = {
     val prefix = steadyContainPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
+    Landing.ensureLanded(spark, prefix,
       Seq(s"${prefix}_post", s"${prefix}_sh")) { path =>
       val corpus = Tables.load(spark, dir, "documents")
         .select("doc_id", "text").filter(col("doc_id") % 4 =!= 1)
@@ -950,26 +940,25 @@ object Dedup extends Logging {
     semanticDedup(plantedNearVectors(spark, dir))
 
   /** Catalog table name for a LANDED SemDedup quantizer (trained cells of
-    * one corpus instantiation) — MD5 of (variant, dir), the
-    * [[steadyIndexPrefix]] collision rationale. */
-  def semanticCellsTable(dir: String, variant: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$variant|$dir".getBytes("UTF-8")).take(8)
-      .map("%02x".format(_)).mkString
-    s"semdedup_${variant}_$suffix"
-  }
+    * one corpus instantiation), keyed by (variant, dir). */
+  def semanticCellsTable(dir: String, variant: String): String =
+    Landing.key(s"semdedup_$variant", s"$variant|$dir")
 
-  /** Land-once-then-read of a SemDedup cell table: trains via `train`
-    * only when the catalog has no landed copy (first call / fresh
-    * catalog), otherwise broadcasts straight off the landed parquet —
-    * the [[graft.operators.Similarity.landedQuantizers]] pattern. */
-  private def ensureSemanticCells(spark: SparkSession, table: String,
-      train: => DataFrame): DataFrame = {
-    graft.sources.Landing.ensureLanded(spark, table, Seq(table)) { path =>
-      train.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").option("path", s"$path/cells").saveAsTable(table)
+  /** The steady SemDedup serve over `emb`: the trained k-means cells land
+    * once as the `variant` cell table (the
+    * [[graft.operators.Similarity.landedQuantizers]] pattern — trained
+    * only on a fresh catalog), and its hier index lands NEXT TO them
+    * (keyed by the same table name) — the serve reads both, trains
+    * neither. */
+  private def semanticDedupSteady(spark: SparkSession, dir: String,
+      variant: String, emb: DataFrame, tau: Double): DataFrame = {
+    val table = semanticCellsTable(dir, variant)
+    Landing.ensureLanded(spark, table, Seq(table)) { path =>
+      Landing.saveTable(Similarity.kmeansCentroidsAuto(emb), table, s"$path/cells")
     }
-    spark.table(table)
+    val (coarseLive, grouped) =
+      Similarity.ensureHierIndex(spark, table, spark.table(table))
+    semanticDedupWithIndex(emb, coarseLive, grouped, tau)
   }
 
   /** STEADY-STATE [[semanticDedupPlanted]]: the trained k-means cells
@@ -978,16 +967,8 @@ object Dedup extends Logging {
     * (assignment cross + within-cell verify + anti-join), training
     * amortized to the first call. Same cells (the trainer is
     * deterministic), same answer, same oracle as the retrain entry. */
-  def semanticDedupPlantedSteady(spark: SparkSession, dir: String): DataFrame = {
-    val emb = plantedNearVectors(spark, dir)
-    val table = semanticCellsTable(dir, "emb")
-    val cells = ensureSemanticCells(spark, table,
-      Similarity.kmeansCentroidsAuto(emb))
-    // the hier index lands NEXT TO the cells (keyed by the same table
-    // name) — the steady serve reads both, trains neither
-    val (coarseLive, grouped) = Similarity.ensureHierIndex(spark, table, cells)
-    semanticDedupWithIndex(emb, coarseLive, grouped, tau = 0.999)
-  }
+  def semanticDedupPlantedSteady(spark: SparkSession, dir: String): DataFrame =
+    semanticDedupSteady(spark, dir, "emb", plantedNearVectors(spark, dir), 0.999)
 
   /** SemDedup over a RAW TEXT corpus — the composition
     * [[TextAnalysis.hashedDocVectors]] (E130) exists for: the corpus
@@ -1024,14 +1005,8 @@ object Dedup extends Logging {
     * itself; only the TRAINING is amortizable). Same answer, same
     * oracle as the retrain entry. */
   def semanticDedupTextSteady(spark: SparkSession, dir: String,
-      tau: Double = 0.99): DataFrame = {
-    val emb = hashedCorpusVectors(spark, dir)
-    val table = semanticCellsTable(dir, "text")
-    val cells = ensureSemanticCells(spark, table,
-      Similarity.kmeansCentroidsAuto(emb))
-    val (coarseLive, grouped) = Similarity.ensureHierIndex(spark, table, cells)
-    semanticDedupWithIndex(emb, coarseLive, grouped, tau)
-  }
+      tau: Double = 0.99): DataFrame =
+    semanticDedupSteady(spark, dir, "text", hashedCorpusVectors(spark, dir), tau)
 
   /** Incremental SEMANTIC arrival dedup — the E77/E78 incremental
     * pattern applied to SemDedup, closing the gap the exact and MinHash
@@ -1865,21 +1840,14 @@ object Dedup extends Logging {
         .groupBy("gh").agg(count(lit(1)).as("df")),
       s"${prefix}_df", Seq("gh"), Seq("gh"), buckets, s"$path/df")
 
-  def softDfPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"softdf_steady_$suffix"
-  }
-
   /** [[softDedupDocs]] served off the landed df table — same corpus, same
     * answer (shared oracle); the corpus-wide aggregate happens at land
     * time only. Lands on first call per corpus dir (the memoized-training
     * house contract: an in-place corpus change requires dropping the
     * `<prefix>_*` tables). */
   def softDedupDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = softDfPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
-      Seq(s"${prefix}_df")) { path =>
+    val prefix = Landing.key("softdf_steady", dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_df")) { path =>
       landGramDfIndex(plantedNearDocs(spark, dir), "doc_id", "text",
         prefix, path)
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with
   * typed metadata, plus the operators a training-data pipeline runs over
@@ -466,13 +466,8 @@ object Multimodal {
   }
 
   /** Catalog table-name prefix for a corpus dir's landed media
-    * signature index — MD5 of the dir (the
-    * [[Dedup.steadyIndexPrefix]] collision rationale). */
-  def mediaSteadyPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"mediadup_steady_$suffix"
-  }
+    * signature index. */
+  def mediaSteadyPrefix(dir: String): String = Landing.key("mediadup_steady", dir)
 
   /** The planted arrival batch both incremental-media instantiations
     * probe with (see [[incrementalMediaArrivals]]). */
@@ -526,7 +521,7 @@ object Multimodal {
     * discipline). */
   def incrementalMediaArrivalsSteady(spark: SparkSession, dir: String): DataFrame = {
     val prefix = mediaSteadyPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
+    Landing.ensureLanded(spark, prefix,
       Seq(s"${prefix}_bands", s"${prefix}_sigs")) { path =>
       val (corpus, _) = mediaArrivalFixture(spark, dir)
       val index = buildMediaSigIndex(corpus, "media_id", "payload")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Landing
 
 /** Sequence packing — greedy first-fit of chunk token counts into
   * fixed-budget bins, the step between [[TextAnalysis.chunkDocs]] and a
@@ -250,23 +251,15 @@ object Packing {
     * serve time. Shares the batch oracle — landed ≡ direct is the law:
     * the layout is a pure function of the count table, so where the
     * counts came from (one scan or fifty batches) is invisible. */
-  def tokenBlocksSteadyDocs(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val path = graft.sources.Landing.ensureDir(spark,
-      s"blocks_steady_$suffix") { p =>
-      val counts = graft.sources.Tables.load(spark, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"),
-          size(TextAnalysis.tokens(coalesce(col("text"), lit(""))))
-            .cast("long").as("n"))
-      counts.filter(col("doc_id") % 2 === 0)
-        .write.parquet(s"$p/gen-0")
-      counts.filter(col("doc_id") % 2 === 1)
-        .write.parquet(s"$p/gen-1")
-    }
-    tokenBlocksFromCounts(spark.read.parquet(s"$path/gen-0")
-      .unionByName(spark.read.parquet(s"$path/gen-1")))
-  }
+  def tokenBlocksSteadyDocs(spark: SparkSession, dir: String): DataFrame =
+    tokenBlocksFromCounts(
+      Landing.ensureHalves(spark, Landing.key("blocks_steady", dir)) { i =>
+        graft.sources.Tables.load(spark, dir, "documents")
+          .select(col("doc_id").cast("long").as("doc_id"),
+            size(TextAnalysis.tokens(coalesce(col("text"), lit(""))))
+              .cast("long").as("n"))
+          .filter(col("doc_id") % 2 === i)
+      })
 
   /** CURRICULUM-ORDERED training blocks — [[tokenBlocks]] cut along
     * [[TextAnalysis.curriculumOrder]]'s (phase, seq) stream instead of
@@ -341,17 +334,11 @@ object Packing {
     * the law, and the 100 TB point: re-ordering the corpus for the next
     * training run (new phases, new context length, new seed) is a
     * metadata job, not a corpus scan. */
-  def curriculumBlocksSteadyDocs(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val path = graft.sources.Landing.ensureDir(spark,
-      s"cur_blocks_steady_$suffix") { p =>
-      val state = TextAnalysis.curriculumStateRows(
-        graft.sources.Tables.load(spark, dir, "documents"), "doc_id", "text")
-      state.filter(col("doc_id") % 2 === 0).write.parquet(s"$p/gen-0")
-      state.filter(col("doc_id") % 2 === 1).write.parquet(s"$p/gen-1")
-    }
-    curriculumBlocksFromState(spark.read.parquet(s"$path/gen-0")
-      .unionByName(spark.read.parquet(s"$path/gen-1")))
-  }
+  def curriculumBlocksSteadyDocs(spark: SparkSession, dir: String): DataFrame =
+    curriculumBlocksFromState(
+      Landing.ensureHalves(spark, Landing.key("cur_blocks_steady", dir)) { i =>
+        TextAnalysis.curriculumStateRows(
+          graft.sources.Tables.load(spark, dir, "documents"), "doc_id", "text")
+          .filter(col("doc_id") % 2 === i)
+      })
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 
 /** KMV (bottom-k / theta) distinct-count sketches — the mergeable
   * cardinality summary an analytics engine serves COUNT(DISTINCT …) and
@@ -146,42 +146,28 @@ object Sketches {
 
   // ── Landed serve (the steady split) ──────────────────────────────
 
-  def kmvPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"kmv_steady_$suffix"
-  }
-
-  /** Land the event sketch as a parquet catalog table — k·|segments|
-    * rows, the durable metadata-scale artifact every later distinct /
-    * overlap question is served from. */
-  def landKmv(spark: SparkSession, dir: String, path: String,
-      k: Int = DefaultK): Unit =
-    eventSketch(spark, dir, k)
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/kmv").saveAsTable(s"${kmvPrefix(dir)}_kmv")
-
-  private def ensureKmv(spark: SparkSession, dir: String, k: Int): Unit =
-    graft.sources.Landing.ensureLanded(spark, kmvPrefix(dir),
-      Seq(s"${kmvPrefix(dir)}_kmv")) { path =>
-      landKmv(spark, dir, path, k)
+  /** The event sketch LANDED as a parquet catalog table on first use —
+    * k·|segments| rows, the durable metadata-scale artifact every later
+    * distinct / overlap question is served from. */
+  private def landedKmv(spark: SparkSession, dir: String, k: Int): DataFrame = {
+    val prefix = Landing.key("kmv_steady", dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_kmv")) { path =>
+      Landing.saveTable(eventSketch(spark, dir, k), s"${prefix}_kmv", s"$path/kmv")
     }
+    spark.table(s"${prefix}_kmv")
+  }
 
   /** STEADY-STATE [[kmvDistinctEvents]]: estimates off the LANDED sketch
     * — events never read; the timed cost is the k·|segments|-row serve.
     * Same answer, same oracle. */
   def kmvDistinctSteady(spark: SparkSession, dir: String,
-      k: Int = DefaultK): DataFrame = {
-    ensureKmv(spark, dir, k)
-    kmvEstimates(spark.table(s"${kmvPrefix(dir)}_kmv"), k)
+      k: Int = DefaultK): DataFrame =
+    kmvEstimates(landedKmv(spark, dir, k), k)
       .withColumnRenamed("key", "event_type")
-  }
 
   /** STEADY-STATE [[kmvSetOpsEvents]]: pairwise estimates off the LANDED
     * sketch. Same answer, same oracle. */
   def kmvSetOpsSteady(spark: SparkSession, dir: String,
-      k: Int = DefaultK): DataFrame = {
-    ensureKmv(spark, dir, k)
-    kmvSetOps(spark.table(s"${kmvPrefix(dir)}_kmv"), k)
-  }
+      k: Int = DefaultK): DataFrame =
+    kmvSetOps(landedKmv(spark, dir, k), k)
 }

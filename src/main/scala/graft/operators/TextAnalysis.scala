@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
-import graft.sources.Tables
+import graft.sources.{Landing, Tables}
 
 /** Text-analysis operators over the `documents` table: corpus language
   * distribution, per-document quality scoring, and a stopword-profile
@@ -552,13 +552,8 @@ object TextAnalysis {
     domainReweight(Tables.load(spark, dir, "documents"),
       "doc_id", "text", "source")
 
-  /** Catalog prefix for the landed LM state of a corpus dir (the MD5
-    * collision rationale shared with [[curationPrefix]]). */
-  def lmPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"lm_state_$suffix"
-  }
+  /** Catalog prefix for the landed LM state of a corpus dir. */
+  def lmPrefix(dir: String): String = Landing.key("lm_state", dir)
 
   /** Land the three LM-state relations as catalog tables — the corpus
     * scan paid ONCE per (immutable) corpus dir: the per-source bigram
@@ -566,8 +561,7 @@ object TextAnalysis {
     * and the |sources|-row doc stats. */
   def landLmState(docs: DataFrame, prefix: String, path: String): Unit = {
     def land(df: DataFrame, name: String): Unit =
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-        .option("path", s"$path/$name").saveAsTable(s"${prefix}_$name")
+      Landing.saveTable(df, s"${prefix}_$name", s"$path/$name")
     land(bigramModelRows(docs, "text", "source"), "model")
     land(lmVocabRows(docs, "text", "source"), "vocab")
     land(lmDocStats(docs, "text", "source"), "stats")
@@ -601,7 +595,7 @@ object TextAnalysis {
   def domainReweightSteadyDocs(spark: SparkSession, dir: String,
       eta: Double = 1.0): DataFrame = {
     val prefix = lmPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
+    Landing.ensureLanded(spark, prefix,
       Seq("model", "vocab", "stats", "excess").map(t => s"${prefix}_$t")) {
       path =>
         landLmState(Tables.load(spark, dir, "documents"), prefix, path)
@@ -730,9 +724,9 @@ object TextAnalysis {
           (col("pos") + 1).as("pos")),
       s"${prefix}_positions", Seq("term"), Seq("term", "doc_id", "pos"),
       buckets, s"$path/positions")
-    withLen.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/stats").saveAsTable(s"${prefix}_stats")
+    Landing.saveTable(
+      withLen.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")),
+      s"${prefix}_stats", s"$path/stats")
   }
 
   /** [[bm25Rank]] served from a LANDED index ([[landSearchIndex]]): the
@@ -859,10 +853,8 @@ object TextAnalysis {
     * positional index — same answer, same oracle; the timed cost is the
     * production serve plan. Occurrence counts > 0 by construction (only
     * matching starts survive the intersection). */
-  def phraseDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    ensureSearchIndex(spark, dir)
-    phraseCountIndexed(spark, searchIndexPrefix(dir), searchPhrase)
-  }
+  def phraseDocsSteady(spark: SparkSession, dir: String): DataFrame =
+    phraseCountIndexed(spark, searchIndex(spark, dir), searchPhrase)
 
   /** PROXIMITY ranking — the minimum covering window (the classic IR
     * proximity signal, Clarke et al.'s cover density class: the
@@ -933,41 +925,30 @@ object TextAnalysis {
 
   /** STEADY-STATE [[proximityDocs]]: the same window tail off the landed
     * bucket-pruned positional index — same answer, same oracle. */
-  def proximityDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    ensureSearchIndex(spark, dir)
-    proximityOver(spark.table(s"${searchIndexPrefix(dir)}_positions"),
+  def proximityDocsSteady(spark: SparkSession, dir: String): DataFrame =
+    proximityOver(spark.table(s"${searchIndex(spark, dir)}_positions"),
       searchQuery)
-  }
 
-  /** Catalog table-name prefix for a corpus dir's landed search index
-    * (MD5 of the dir — the [[graft.operators.Dedup.steadyIndexPrefix]]
-    * collision rationale). */
-  def searchIndexPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"search_steady_$suffix"
-  }
-
-  /** Land the search index for a corpus dir once per catalog: ALL the
-    * index tables must exist — a land that failed between the writes
-    * must re-land (Overwrite), not wedge every later serve. */
-  private def ensureSearchIndex(spark: SparkSession, dir: String): Unit = {
-    val prefix = searchIndexPrefix(dir)
-    val tables = Seq("_postings", "_positions", "_stats").map(prefix + _)
-    graft.sources.Landing.ensureLanded(spark, prefix, tables) { path =>
+  /** The catalog table prefix of a corpus dir's landed search index
+    * ([[landSearchIndex]]), landed on first use — all three tables as
+    * one artifact, so a land that failed between the writes re-lands
+    * instead of wedging every later serve. */
+  private def searchIndex(spark: SparkSession, dir: String): String = {
+    val prefix = Landing.key("search_steady", dir)
+    Landing.ensureLanded(spark, prefix,
+      Seq("_postings", "_positions", "_stats").map(prefix + _)) { path =>
       landSearchIndex(Tables.load(spark, dir, "documents"),
         "doc_id", "text", prefix, path)
     }
+    prefix
   }
 
   /** STEADY-STATE [[searchDocs]]: land the inverted index once per
     * (catalog, corpus dir), then serve every query from the bucket-pruned
     * landed tables — same answer, same oracle; the timed cost is the
     * production serve plan. */
-  def searchDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    ensureSearchIndex(spark, dir)
-    bm25RankIndexed(spark, searchIndexPrefix(dir), searchQuery, k = 25)
-  }
+  def searchDocsSteady(spark: SparkSession, dir: String): DataFrame =
+    bm25RankIndexed(spark, searchIndex(spark, dir), searchQuery, k = 25)
 
   /** Token-BUDGET corpus mix — the other published mixing form next to
     * [[mixCorpus]]'s temperature sampling: each source contributes
@@ -1350,14 +1331,14 @@ object TextAnalysis {
     * `sim_topk_ivfpq_*` house style) fused with the lexical replay. */
   def hybridDocsSteady(spark: SparkSession, dir: String,
       depth: Int = 50, k: Int = 25, k0: Int = 60, r: Int = 4): DataFrame = {
-    ensureSearchIndex(spark, dir)
+    val prefix = searchIndex(spark, dir)
     // the lexical top-depth cut and the dense leg's eager probe/refine
     // collects are INDEPENDENT job chains — overlap them (guide §2.6 via
     // [[Similarity.overlapJobs]]; the r17 verdict ask). The lex leg pins
     // its ≤ depth-row cut (bounded by the k-cut above it) so the fusion
     // tail reads a materialized leaf; both legs' values are unchanged.
     val (lex, dense) = Similarity.overlapJobs(spark)(
-      bm25RankIndexed(spark, searchIndexPrefix(dir), searchQuery, k = depth)
+      bm25RankIndexed(spark, prefix, searchQuery, k = depth)
         .select(col("doc_id"), col("score")).localCheckpoint()) {
       Similarity.topKPqIvf(spark, dir, Similarity.IvfPqSpec(Similarity.Landed),
           k = depth, refine = Some(r), queryIds = Seq(0L))
@@ -1408,8 +1389,7 @@ object TextAnalysis {
     * twice). */
   def bm25PrfSteady(spark: SparkSession, dir: String, fb: Int = 10,
       e: Int = 5, k: Int = 25): DataFrame = {
-    ensureSearchIndex(spark, dir)
-    val prefix = searchIndexPrefix(dir)
+    val prefix = searchIndex(spark, dir)
     val topIds = bm25RankIndexed(spark, prefix, searchQuery, fb)
       .select(col("doc_id").cast("long"))
       .collect().map(_.getLong(0)).toSeq.sorted
@@ -2024,22 +2004,12 @@ object TextAnalysis {
     * Shares the batch oracle: pair counts are additive over any
     * batch partition of the corpus, so where they came from is
     * invisible — the report never re-reads text. */
-  def collocationsSteadyDocs(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val path = graft.sources.Landing.ensureDir(spark,
-      s"colloc_steady_$suffix") { p =>
-      val docs = Tables.load(spark, dir, "documents")
-      collocationPairRows(docs.filter(col("doc_id") % 2 === 0), "text")
-        .write.parquet(s"$p/gen-0")
-      collocationPairRows(docs.filter(col("doc_id") % 2 === 1), "text")
-        .write.parquet(s"$p/gen-1")
-    }
+  def collocationsSteadyDocs(spark: SparkSession, dir: String): DataFrame =
     collocationsFromPairs(
-      spark.read.parquet(s"$path/gen-0")
-        .unionByName(spark.read.parquet(s"$path/gen-1"))
-        .groupBy("w1", "w2").agg(sum(col("c")).as("c")))
-  }
+      Landing.ensureHalves(spark, Landing.key("colloc_steady", dir)) { i =>
+        collocationPairRows(Tables.load(spark, dir, "documents")
+          .filter(col("doc_id") % 2 === i), "text")
+      }.groupBy("w1", "w2").agg(sum(col("c")).as("c")))
 
   /** Feature-hashed document vectors (the hashing trick — the published
     * fastText/Vowpal-Wabbit device): every token hashes into one of
@@ -2459,31 +2429,23 @@ object TextAnalysis {
     * influence the model they are scored under). */
   def landDsirModel(docs: DataFrame, idCol: String, textCol: String,
       isTarget: Column, dims: Int, prefix: String, path: String): Unit =
-    dsirLlr(dsirBase(docs, idCol, textCol, isTarget, dims), dims)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/llr").saveAsTable(s"${prefix}_llr")
+    Landing.saveTable(dsirLlr(dsirBase(docs, idCol, textCol, isTarget, dims), dims),
+      s"${prefix}_llr", s"$path/llr")
 
   /** Catalog table-name prefix for a corpus dir's landed DSIR model. */
-  def dsirPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"dsir_steady_$suffix"
-  }
-
-  private def ensureDsirModel(spark: SparkSession, dir: String): Unit =
-    graft.sources.Landing.ensureLanded(spark, dsirPrefix(dir),
-      Seq(s"${dsirPrefix(dir)}_llr")) { path =>
-      landDsirModel(Tables.load(spark, dir, "documents"),
-        "doc_id", "text", col("lang") === "en", 64, dsirPrefix(dir), path)
-    }
+  def dsirPrefix(dir: String): String = Landing.key("dsir_steady", dir)
 
   /** STEADY-STATE [[dsirDocs]]: score + cut under the LANDED model —
     * the per-batch production plan (one scan-side kernel projection, a
     * dims-row artifact read, the top-k heap); no posexplode, no model
     * aggregate, no fit. Same answer, same oracle. */
   def dsirDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    ensureDsirModel(spark, dir)
-    val llr = collectLlr(spark.table(s"${dsirPrefix(dir)}_llr"))
+    val prefix = dsirPrefix(dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_llr")) { path =>
+      landDsirModel(Tables.load(spark, dir, "documents"),
+        "doc_id", "text", col("lang") === "en", 64, prefix, path)
+    }
+    val llr = collectLlr(spark.table(s"${prefix}_llr"))
     dsirScore(dsirBase(Tables.load(spark, dir, "documents"),
       "doc_id", "text", col("lang") === "en", 64), llr, k = 100)
   }
@@ -2647,23 +2609,6 @@ object TextAnalysis {
         sum(col("n_novel")).as("nov_sum"))
   }
 
-  /** Catalog prefix for the landed per-source curation stats of a corpus
-    * dir (the MD5 collision rationale shared with
-    * [[graft.operators.Dedup.softDfPrefix]]). */
-  def curationPrefix(dir: String): String = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"curation_steady_$suffix"
-  }
-
-  /** Land the |sources|-row additive aggregate as a catalog table — the
-    * corpus scan paid ONCE per (immutable) corpus dir. */
-  def landCurationStats(corpus: DataFrame, prefix: String,
-      path: String): Unit =
-    curationBySource(corpus)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      .option("path", s"$path/src_stats").saveAsTable(s"${prefix}_src_stats")
-
   /** CORRECTNESS instantiation over the planted report corpus. */
   def curationReportDocs(spark: SparkSession, dir: String): DataFrame =
     curationReport(curationCorpus(spark, dir))
@@ -2678,12 +2623,13 @@ object TextAnalysis {
     * corpus-size-independent. Same answer, same oracle as the direct
     * entry (landed ≡ direct law); the streaming maintenance of the same
     * relation lives in [[graft.streaming.UnifiedIngest]]'s curation
-    * generations. */
+    * generations. The stats land as a catalog table — the corpus scan
+    * paid ONCE per (immutable) corpus dir. */
   def curationReportSteadyDocs(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = curationPrefix(dir)
-    graft.sources.Landing.ensureLanded(spark, prefix,
-      Seq(s"${prefix}_src_stats")) { path =>
-      landCurationStats(curationCorpus(spark, dir), prefix, path)
+    val prefix = Landing.key("curation_steady", dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_src_stats")) { path =>
+      Landing.saveTable(curationBySource(curationCorpus(spark, dir)),
+        s"${prefix}_src_stats", s"$path/src_stats")
     }
     curationReportTail(spark.table(s"${prefix}_src_stats"))
   }
@@ -2763,9 +2709,8 @@ object TextAnalysis {
     * rescore. (The qrel projection still scans the corpus — it is the
     * ground-truth side of the eval, not the serve.) */
   def retrievalEvalSteadyDocs(spark: SparkSession, dir: String): DataFrame = {
-    ensureSearchIndex(spark, dir)
     retrievalEvalOf(
-      bm25RankIndexed(spark, searchIndexPrefix(dir), searchQuery, k = 25),
+      bm25RankIndexed(spark, searchIndex(spark, dir), searchQuery, k = 25),
       relevantIds(Tables.load(spark, dir, "documents"), "doc_id", "text",
         searchQuery),
       "doc_id", k = 25)

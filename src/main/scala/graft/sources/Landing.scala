@@ -3,7 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Atomic, durable land-or-load for derived artifacts (trained quantizers,
@@ -58,6 +58,13 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   * [[FormatVersion]] is part of the on-disk path: bump it whenever any
   * landed artifact's schema or semantics changes, so a durable root never
   * serves a stale-format artifact to newer code.
+  *
+  * Naming: every artifact of a corpus dir is keyed by [[key]] —
+  * `<kind>_<md5(dir)>` — which names its dir under the state root, its
+  * build lock and (as a prefix) its catalog tables. Builders write plain
+  * tables through [[saveTable]], bucketed ones through
+  * [[Layout.writeBucketed]], and two-half parquet dirs through
+  * [[ensureHalves]].
   */
 object Landing {
   /** On-disk format/semantics version of ALL landed artifacts (one shared
@@ -89,6 +96,23 @@ object Landing {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(artifact: String): Object =
     locks.computeIfAbsent(artifact, _ => new Object)
+
+  /** The artifact key of `kind` over corpus dir (or other identity
+    * string) `of`: `kind_` plus the hex of the first 8 MD5 bytes of
+    * `of`'s UTF-8 encoding. A digest, not `String.hashCode`: a 31-bit
+    * clash between two corpus dirs would silently serve one dir's
+    * artifact for the other; 64 bits of MD5 make that a non-event. The
+    * key is on disk and in the catalog, so it never changes — a root
+    * landed by an earlier run keeps serving. */
+  def key(kind: String, of: String): String =
+    kind + "_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(of.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** The plain-table writer of `ensureLanded` builds: `df` as parquet at
+    * `path`, registered as catalog table `table`. */
+  def saveTable(df: DataFrame, table: String, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .option("path", path).saveAsTable(table)
 
   def stateRoot(spark: SparkSession): Path = {
     val base = sys.props.get("graft.state.dir")
@@ -197,6 +221,18 @@ object Landing {
         }
       }
     }
+  }
+
+  /** Land-or-load a two-half parquet dir artifact: `half(i)` for i = 0,
+    * 1 lands as `gen-<i>` (the id-parity splits a maintainer accumulates
+    * batch by batch), and the union of both landed halves is returned. */
+  def ensureHalves(spark: SparkSession, artifact: String)
+      (half: Int => DataFrame): DataFrame = {
+    val path = ensureDir(spark, artifact) { p =>
+      Seq(0, 1).foreach(i => half(i).write.parquet(s"$p/gen-$i"))
+    }
+    spark.read.parquet(s"$path/gen-0")
+      .unionByName(spark.read.parquet(s"$path/gen-1"))
   }
 
   /** Where a build writes: a sibling staging dir (rename mode — published

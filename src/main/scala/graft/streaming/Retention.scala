@@ -113,13 +113,6 @@ object Retention {
       case None => df
     }
 
-  /** Fold accumulated tombstone generations into one (ids are
-    * duplication-inert — filtering is idempotent and new-delete
-    * computations read the distinct set — so the self-healing
-    * [[Generations.compactFold]] discipline applies). */
-  def compactTombstones(spark: SparkSession, stateDir: String): Unit =
-    Generations.compactFold(spark, root(stateDir))
-
   /** True iff the tombstone generation for `requestId` has committed under
     * `stateDir` — the guard the additive-delta delete paths
     * ([[StreamSearchIndex.delete]], [[StreamSoftDf.delete]]) use to make a

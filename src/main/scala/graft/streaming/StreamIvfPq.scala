@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Similarity
+import graft.sources.Landing
 
 /** Continuous IVF-PQ index maintenance — the ANN sibling of
   * [[StreamNearDedup]]: arriving vectors are encoded with the LANDED
@@ -292,19 +293,6 @@ object StreamIvfPq extends Logging {
       queries, k, nprobe, probesPre = Some(probes))
   }
 
-  /** [[search]] with the quantizers from the corpus dir's landed
-    * artifact tables. */
-  def searchFromLanded(spark: SparkSession, indexDir: String,
-      queries: DataFrame, corpusDir: String, k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
-    val (centroids, book) = Similarity.landedQuantizers(spark, corpusDir)
-    search(spark, indexDir, queries, centroids, book, k, nprobe)
-  }
-
-  // process-local memo of demo store roots, keyed by corpus dir (the
-  // landedQuantizers convention: state is rebuilt once per process)
-  private var reshardStates = Map.empty[String, String]
-
   /** The re-shard life cycle as a batch-invokable CORRECTNESS entry
     * (`sim_topk_ivfpq_reshard`): build the store the way the stream does
     * — two generations encoded under the caller-FIXED 16-cell quantizers
@@ -314,24 +302,19 @@ object StreamIvfPq extends Logging {
     * √N-sized landed operator ([[Similarity.topKPqIvf]]) on the same
     * corpus — the entry SHARES that oracle (the landed ≡ direct law):
     * the store's history (built fixed, re-sharded later) is invisible to
-    * the served answer, which is the whole point of the re-shard. */
+    * the served answer, which is the whole point of the re-shard. The
+    * store is a landed artifact dir ([[graft.sources.Landing.ensureDir]]):
+    * built once per state root, found again by a restarted process. */
   def reshardedDocs(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
       .select("vec_id", "embedding")
     val (cent16, book) = Similarity.landedQuantizers(spark, dir)
-    val state = synchronized {
-      reshardStates.get(dir) match {
-        case Some(s) => s
-        case None =>
-          val s = java.nio.file.Files
-            .createTempDirectory("graft_reshard_").toString + "/codes"
-          indexBatch(emb.filter(col("vec_id") % 2 === 0), s, 0, cent16, book)
-          indexBatch(emb.filter(col("vec_id") % 2 === 1), s, 1, cent16, book)
-          reshard(spark, s, emb, book, force = true)
-          reshardStates += dir -> s
-          s
-      }
-    }
-    search(spark, state, Similarity.defaultQueries(emb), cent16, book, k)
+    val store = Landing.ensureDir(spark, Landing.key("ivfpq_reshard", dir)) { p =>
+      val s = s"$p/codes"
+      indexBatch(emb.filter(col("vec_id") % 2 === 0), s, 0, cent16, book)
+      indexBatch(emb.filter(col("vec_id") % 2 === 1), s, 1, cent16, book)
+      reshard(spark, s, emb, book, force = true)
+    } + "/codes"
+    search(spark, store, Similarity.defaultQueries(emb), cent16, book, k)
   }
 }

@@ -235,4 +235,39 @@ class StreamIvfPqSpec extends SparkTestBase {
       scaledWant(remaining, remaining, probeIds),
       "post-retry serve must equal the batch operator at the retrained sizing")
   }
+
+  test("the re-shard demo store is one landed artifact under the state root, built once") {
+    val dir = "/root/testdata/sf0.001"
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val root = graft.sources.Landing.stateRoot(spark)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val store = new org.apache.hadoop.fs.Path(root, s"ivfpq_reshard_$md5/codes")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def leaked: Set[String] =
+      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft_reshard_"))
+    val leakedBefore = leaked
+    def rows() = StreamIvfPq.reshardedDocs(spark, dir)
+      .as[(Long, Long, Double)].collect().toSet
+    val first = rows()
+    assert(fs.isDirectory(store), s"the store must live at $store")
+    assert(StreamIvfPq.quantSidecarPath(spark, store.toString).isDefined,
+      "the landed store must carry its re-shard's quantizer sidecar")
+    // a warm call costs what loading the quantizers plus one serve off
+    // the landed store costs; a rebuild adds two encodes, the re-shard's
+    // k-means and its fold
+    val emb = graft.sources.Tables.load(spark, dir, "embeddings")
+      .select("vec_id", "embedding")
+    val ((cent16, book), quantJobs) =
+      jobsDuring(spark)(Similarity.landedQuantizers(spark, dir))
+    val (_, serveJobs) = jobsDuring(spark)(StreamIvfPq.search(spark,
+      store.toString, Similarity.defaultQueries(emb), cent16, book).collect())
+    val (second, warmJobs) = jobsDuring(spark)(rows())
+    assert(second == first, "the warm call must serve the same answer")
+    assert(warmJobs <= quantJobs + serveJobs,
+      s"the warm call started $warmJobs jobs, more than the quantizer load " +
+        s"($quantJobs) plus a serve ($serveJobs): it rebuilt the store")
+    assert(leaked == leakedBefore,
+      s"no graft_reshard_* temp dir may appear: ${leaked -- leakedBefore}")
+  }
 }
