@@ -42,12 +42,8 @@ object StreamJob {
 
   def main(args: Array[String]): Unit = {
     val env = sys.env
-    val builder = SparkSession.builder()
-      .appName("graft-stream-job")
+    val builder = Sessions.builder("graft-stream-job")
       .config("spark.sql.shuffle.partitions", env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
     env.get("GRAFT_S3_REGION").foreach { region =>
       val (endpoint, ssl) = env.get("GRAFT_S3_ENDPOINT") match {
         case Some(raw) =>

@@ -1,9 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round, UnsafeArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.functions.{GraftFunctions, VectorKernels}
 import graft.sources.{Landing, Tables}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding
@@ -328,8 +333,14 @@ object Similarity {
     * centroid set (the incremental gates: corpus + batch; the streaming
     * maintainers: every micro-batch) pay the O(k·√k) coarse training
     * ONCE — at production k a per-batch retrain would dominate small
-    * batches. Both outputs are localCheckpoint'd (the kmeansCentroids
-    * discipline) so multi-consumer plans read materialized leaves.
+    * batches. At most [[FlatTrainerMaxSeeds]] centroids (the bound
+    * [[kmeansCentroidsAuto]] dispatches on, so every flat-trained set) the
+    * whole training runs on the driver ([[hierIndexLocal]]) and both
+    * outputs are local relations: no job, and free to read. Above it the
+    * training is distributed and both outputs are localCheckpoint'd (the
+    * kmeansCentroids discipline) so multi-consumer plans read
+    * materialized leaves. `localMaxRows` is a parameter only so the
+    * driver ≡ distributed law is spec-testable; callers take the default.
     * BYTE BOUND, stated honestly: "k-row" is NOT constant — under
     * SemDedup sizing k ≈ N/29, so `grouped` pins ≈ k·(dim·4 + ~16) B of
     * embedding rows to executor local disk (64-lane floats ≈ 272 B/row
@@ -339,9 +350,15 @@ object Similarity {
     * asymptote — and the production spelling is the LANDED form
     * ([[ensureHierIndex]]), where both tables live as parquet and no
     * call pins local disk. */
-  def hierIndex(centroids: DataFrame,
-      stride: Option[Long] = None): (DataFrame, DataFrame) = {
-    val k = centroids.count() // bounded: |centroids| rows
+  def hierIndex(centroids: DataFrame, stride: Option[Long] = None,
+      localMaxRows: Long = FlatTrainerMaxSeeds): (DataFrame, DataFrame) = {
+    // one bounded read answers "k <= localMaxRows?" (kmeansCentroidsAuto's
+    // dispatch device) and, when it does, IS the centroid set; a local
+    // relation (the flat trainer's output) answers it with no job
+    val lim = math.min(localMaxRows + 1L, Int.MaxValue.toLong).toInt
+    val head = centroids.select("cell_id", "c_emb").limit(lim).collect()
+    val local = head.length <= localMaxRows
+    val k = if (local) head.length.toLong else centroids.count()
     val s = stride.getOrElse(
       math.max(1L, math.ceil(math.sqrt(k.toDouble)).toLong))
     // stride 1: the coarse level IS the centroid set (the degeneracy
@@ -371,7 +388,8 @@ object Similarity {
         .join(grouped.select("g_id").distinct(), Seq("g_id"), "left_semi")
         .localCheckpoint()
       (coarseLive, grouped)
-    } else {
+    } else if (local) hierIndexLocal(centroids, head, s)
+    else {
       // the coarse training is the driver-frontier flat recurrence (r18):
       // its ⌈√k⌉-row result comes back as arrays — same values as the
       // distributed spelling (bit-identical recenter arithmetic), with
@@ -391,12 +409,53 @@ object Similarity {
       // the coarse set itself
       val live = grouped.select("g_id").distinct()
         .collect().map(_.getLong(0)).toSet
-      val keep = gids.indices.filter(i => live(gids(i)))
-      val coarseLive = centArraysToDf(centroids.sparkSession,
-          keep.map(gids(_)).toArray, keep.map(gvecs(_)).toArray)
-        .select(col("cell_id").as("g_id"), col("c_emb").as("g_emb"))
-      (coarseLive, grouped)
+      (liveCoarse(centroids.sparkSession, gids, gvecs, live), grouped)
     }
+  }
+
+  /** The stage-1 argmax set: the coarse centroids that own ≥1 member, as
+    * a local (g_id, g_emb) relation. */
+  private def liveCoarse(spark: SparkSession, gids: Array[Long],
+      gvecs: Array[Array[Float]], live: Set[Long]): DataFrame = {
+    val keep = gids.indices.filter(i => live(gids(i)))
+    centArraysToDf(spark, keep.map(gids(_)).toArray, keep.map(gvecs(_)).toArray)
+      .select(col("cell_id").as("g_id"), col("c_emb").as("g_emb"))
+  }
+
+  /** [[hierIndex]]'s trained branch on the DRIVER, for the collected
+    * `rows` (cell_id, c_emb) of a centroid set of at most
+    * [[FlatTrainerMaxSeeds]] rows — the flat trainer's frontier class, so
+    * the rows are already driver-sized. Step for step the distributed
+    * branch: dense rank = position in cell_id order; seeds = every
+    * `s`-th rank with an embedding; Lloyd's by [[kmeansIterLocal]]; the
+    * regroup is the same [[VectorKernels.nearestCell]] argmax over the
+    * coarse arrays (a null c_emb keeps a null g_id); the live cut keeps
+    * the coarse ids that own ≥1 member. `grouped` keeps the centroid
+    * set's own cell_id and c_emb columns. Runs no job. */
+  private def hierIndexLocal(centroids: DataFrame, rows: Array[Row],
+      s: Long): (DataFrame, DataFrame) = {
+    require(!rows.exists(_.isNullAt(0)),
+      "hierIndex: the centroid set carries null cell_id keys (contract: non-null)")
+    val ranked = rows.sortBy(_.getAs[Number](0).longValue)
+    val vecs = ranked.map(r =>
+      if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    val embs = vecs.map(v =>
+      if (v == null) null else UnsafeArrayData.fromPrimitiveArray(v))
+    val seeds = vecs.indices.filter(i => i % s == 0 && vecs(i) != null)
+    val (gids, gvecs) = kmeansIterLocal(embs,
+      seeds.map(_.toLong).toArray, seeds.map(vecs(_)).toArray, iters = 3)
+    val gOf: Array[java.lang.Long] = embs.map(e =>
+      if (e == null) null
+      else java.lang.Long.valueOf(VectorKernels.nearestCell(e, gids, gvecs)))
+    val spark = centroids.sparkSession
+    val (cellF, embF) = (centroids.schema("cell_id"), centroids.schema("c_emb"))
+    val grouped = spark.createDataFrame(
+      (if (gids.isEmpty) Seq.empty[Row]
+       else ranked.indices.map(i => Row(ranked(i).get(0), gOf(i), ranked(i).get(1))))
+        .asJava,
+      StructType(Seq(cellF, StructField("g_id", LongType, embF.nullable), embF)))
+    val live = gOf.iterator.filter(_ != null).map(_.longValue).toSet
+    (liveCoarse(spark, gids, gvecs, live), grouped)
   }
 
   /** Land-or-load the two-level assignment index for a LANDED centroid
@@ -554,6 +613,38 @@ object Similarity {
     (ids, vecs)
   }
 
+  /** [[kmeansIterFlatArrays]] with the corpus ON THE DRIVER too (the
+    * rows [[hierIndexLocal]] trains over): the same
+    * [[VectorKernels.nearestCell]] assignment, the same per-(cell, lane)
+    * mean over the members that carry the lane, passed through Spark's
+    * own `round(_, 6)` before the same double→float narrowing; cells
+    * left with no lane drop out, as in the aggregate. Null rows are not
+    * members. */
+  private def kmeansIterLocal(embs: Array[UnsafeArrayData], init: Array[Long],
+      initVecs: Array[Array[Float]], iters: Int): (Array[Long], Array[Array[Float]]) = {
+    val round6 = Round(BoundReference(0, DoubleType, nullable = true), Literal(6))
+    val rows = embs.filter(_ != null)
+    var ids = init
+    var vecs = initVecs
+    for (_ <- 1 to iters) {
+      if (ids.nonEmpty) {
+        val next = rows.groupBy(VectorKernels.nearestCell(_, ids, vecs))
+          .toArray.sortBy(_._1).flatMap { case (cell, members) =>
+            val dim = members.map(_.numElements).max
+            Option.when(dim > 0)(cell -> Array.tabulate(dim) { lane =>
+              val vs = members.filter(e => lane < e.numElements && !e.isNullAt(lane))
+                .map(_.getFloat(lane).toDouble)
+              round6.eval(InternalRow(vs.sum / vs.length))
+                .asInstanceOf[Double].toFloat
+            })
+          }
+        ids = next.map(_._1)
+        vecs = next.map(_._2)
+      }
+    }
+    (ids, vecs)
+  }
+
   /** Lloyd's re-centering step, shared by both trainers: per-(cell, lane)
     * means over the assigned rows (row-local posexplode + a two-phase
     * avg — k·dim rows cross the shuffle, never vectors), 6-dp rounded
@@ -600,7 +691,7 @@ object Similarity {
     * construction. */
   def kmeansCentroidsHier(emb: DataFrame, initEvery: Int = 29,
       iters: Int = 3): DataFrame =
-    // k-row frontier checkpointed: hierIndex counts + scans it 4×
+    // k-row frontier checkpointed: hierIndex reads + scans it 5×
     kmeansIterHier(emb, seedInit(emb, initEvery).localCheckpoint(), iters)
 
   private def kmeansIterHier(emb: DataFrame, init: DataFrame,

@@ -2348,7 +2348,7 @@ object TextAnalysis {
       GraftFunctions.hashLaneCounts(col(textCol), dims).as("cnt"))
 
   /** The fitted model as a relation: one (lane, llr) row per lane —
-    * what [[landDsirModel]] persists. */
+    * what [[dsirModelTable]] lands. */
   private def dsirLlr(base: DataFrame, dims: Int): DataFrame = {
     val model = base
       .select(col("is_target"), posexplode(col("cnt")).as(Seq("lane", "c")))
@@ -2422,30 +2422,31 @@ object TextAnalysis {
     dsirResample(docs, "doc_id", "text", col("lang") === "en")
   }
 
-  /** Land the fitted DSIR model — the dims-row (lane, llr) table — as a
-    * catalog artifact, so steady serves (and streamed admission gates)
-    * score under a FROZEN model with no fit anywhere in the plan: the
-    * production asymmetry of every landed-quantizer path (arrivals never
-    * influence the model they are scored under). */
-  def landDsirModel(docs: DataFrame, idCol: String, textCol: String,
-      isTarget: Column, dims: Int, prefix: String, path: String): Unit =
-    Landing.saveTable(dsirLlr(dsirBase(docs, idCol, textCol, isTarget, dims), dims),
-      s"${prefix}_llr", s"$path/llr")
-
   /** Catalog table-name prefix for a corpus dir's landed DSIR model. */
   def dsirPrefix(dir: String): String = Landing.key("dsir_steady", dir)
+
+  /** The corpus dir's fitted DSIR model — the dims-row (lane, llr) table
+    * — landed as a catalog artifact on first use; returns its table name.
+    * Steady serves (and streamed admission gates) score under this FROZEN
+    * model with no fit anywhere in the plan: the production asymmetry of
+    * every landed-quantizer path (arrivals never influence the model they
+    * are scored under). */
+  def dsirModelTable(spark: SparkSession, dir: String): String = {
+    val prefix = dsirPrefix(dir)
+    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_llr")) { path =>
+      val base = dsirBase(Tables.load(spark, dir, "documents"),
+        "doc_id", "text", col("lang") === "en", 64)
+      Landing.saveTable(dsirLlr(base, 64), s"${prefix}_llr", s"$path/llr")
+    }
+    s"${prefix}_llr"
+  }
 
   /** STEADY-STATE [[dsirDocs]]: score + cut under the LANDED model —
     * the per-batch production plan (one scan-side kernel projection, a
     * dims-row artifact read, the top-k heap); no posexplode, no model
     * aggregate, no fit. Same answer, same oracle. */
   def dsirDocsSteady(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = dsirPrefix(dir)
-    Landing.ensureLanded(spark, prefix, Seq(s"${prefix}_llr")) { path =>
-      landDsirModel(Tables.load(spark, dir, "documents"),
-        "doc_id", "text", col("lang") === "en", 64, prefix, path)
-    }
-    val llr = collectLlr(spark.table(s"${prefix}_llr"))
+    val llr = collectLlr(spark.table(dsirModelTable(spark, dir)))
     dsirScore(dsirBase(Tables.load(spark, dir, "documents"),
       "doc_id", "text", col("lang") === "en", 64), llr, k = 100)
   }

@@ -48,15 +48,10 @@ object SparkTestBase {
     // per-JVM too (set BEFORE first Landing use; suites share this JVM)
     sys.props.getOrElseUpdate("graft.state.dir", java.nio.file.Files
       .createTempDirectory("graft_test_state_").toString)
-    SparkSession.builder()
+    Sessions.builder("graft-test")
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
   }
 }

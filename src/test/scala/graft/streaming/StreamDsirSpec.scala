@@ -5,6 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import graft.operators.TextAnalysis
+import graft.sources.Landing
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Streaming DSIR admission gate: a stateless row-local weight floor
   * under a frozen landed model — the admitted set equals the batch gate
@@ -17,14 +20,16 @@ class StreamDsirSpec extends SparkTestBase {
   test("admitted set equals the batch gate on the union, cross-restart") {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.load(spark, dir, "documents")
-    // the E153 landed model for this corpus (idempotent per session)
-    val prefix = TextAnalysis.dsirPrefix(dir)
-    if (!spark.catalog.tableExists(s"${prefix}_llr")) {
-      val p = Files.createTempDirectory("graft_sdsir_model_").toString
-      TextAnalysis.landDsirModel(docs, "doc_id", "text",
-        col("lang") === "en", 64, prefix, p)
-    }
-    val llr = spark.table(s"${prefix}_llr").orderBy("lane")
+    // the E153 landed model for this corpus — the artifact the steady
+    // serve lands under the state root (idempotent per session)
+    val model = TextAnalysis.dsirModelTable(spark, dir)
+    val artifact = new Path(Landing.stateRoot(spark), TextAnalysis.dsirPrefix(dir))
+    val fs = artifact.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = fs.makeQualified(new Path(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(model)).location))
+    assert(loc.toString.startsWith(fs.makeQualified(artifact).toString + "/"),
+      s"model table $model lives at $loc, outside its Landing artifact")
+    val llr = spark.table(model).orderBy("lane")
       .collect().map(_.getDouble(1))
     // a floor that BINDS both ways: the median weight of the corpus
     val weights = StreamDsir.gate(docs, llr, Double.NegativeInfinity)
@@ -39,7 +44,7 @@ class StreamDsirSpec extends SparkTestBase {
       spark.sqlContext)
     def runOnce(): Unit =
       StreamDsir.start(input.toDF().toDF("doc_id", "text", "source"),
-        s"${prefix}_llr", floor, s"$tmp/out", s"$tmp/ckpt")
+        model, floor, s"$tmp/out", s"$tmp/ckpt")
         .awaitTermination()
     val batches = all.grouped((all.size + 2) / 3).toSeq
     input.addData(batches(0): _*); runOnce() // restart boundary per batch

@@ -20,6 +20,8 @@ def main() -> None:
                 ev = json.loads(line)
             except json.JSONDecodeError:
                 continue
+            if not isinstance(ev, dict):
+                continue
             kind = ev.get("Event")
             if kind == "SparkListenerJobStart":
                 jid = ev["Job ID"]
