@@ -27,7 +27,7 @@ object Compaction {
       targetBytes: Long = 128L << 20,
       clusterBy: Option[String] = None): (Int, Int) = {
     require(targetBytes > 0)
-    val df = spark.read.parquet(inPath)
+    val df = Tables.read(spark, inPath)
     val fs = new Path(inPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = df.inputFiles
     val totalBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
@@ -37,6 +37,6 @@ object Compaction {
       case None      => df.repartition(n)
     }
     out.write.mode(SaveMode.Overwrite).parquet(outPath)
-    (files.length, spark.read.parquet(outPath).inputFiles.length)
+    (files.length, Tables.read(spark, outPath).inputFiles.length)
   }
 }

@@ -231,8 +231,7 @@ object Landing {
     val path = ensureDir(spark, artifact) { p =>
       Seq(0, 1).foreach(i => half(i).write.parquet(s"$p/gen-$i"))
     }
-    spark.read.parquet(s"$path/gen-0")
-      .unionByName(spark.read.parquet(s"$path/gen-1"))
+    Tables.read(spark, s"$path/gen-0").unionByName(Tables.read(spark, s"$path/gen-1"))
   }
 
   /** Where a build writes: a sibling staging dir (rename mode — published

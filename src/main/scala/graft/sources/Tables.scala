@@ -23,13 +23,15 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType}
   * is dominated by how few bytes we can get away with reading, so every
   * query below should show PushedFilters / narrow ReadSchema in explain().
   *
-  * Loading runs no Spark job. A bare `spark.read.parquet(p)` starts a
+  * Loading runs no Spark job. A bare `spark.read` of parquet starts a
   * one-task schema-inference job on every call just to read one footer;
-  * `footerSchema` reads that footer on the driver instead and hands the
-  * result to `spark.read.schema(_).parquet(p)`. The schema is the one
+  * [[read]] reads that footer on the driver instead and hands the result
+  * to `spark.read.schema(_).parquet(paths: _*)`. The schema is the one
   * Spark's inference returns (its footer logic, which is `private[parquet]`,
-  * is mirrored here), read afresh on every load: a rewritten file is seen
+  * is mirrored here), read afresh on every read: a rewritten file is seen
   * at once, and there is no schema copy that could drift from the files.
+  * Every parquet read in `graft.sources` and `graft.streaming` goes
+  * through [[read]].
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -39,8 +41,7 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir, name)
-    val df = spark.read.schema(footerSchema(spark, p)).parquet(p)
+    val df = read(spark, path(dir, name))
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads with
     // spark.sql.legacy.parquet.nanosAsLong=true (set in our sessions) as a
     // raw long. Convert to a proper timestamp here; integer DIV, not /1000.0
@@ -50,35 +51,46 @@ object Tables {
     else df
   }
 
-  /** The data schema `spark.read.parquet(p)` would infer, read on the
-    * driver from the footer of `p`'s first data file. As in Spark's
-    * inference with `mergeSchema` off (its default):
+  /** A parquet read of `paths` that starts no job: the scan `spark.read`
+    * builds, with the schema its inference would return read on the
+    * driver ([[footerSchema]]). Partition columns are still discovered
+    * from the `k=v` directories, and filters on them still prune. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, paths)).parquet(paths: _*)
+
+  /** The data schema a parquet read of `paths` would infer, read on the
+    * driver from the footer of the first data file across all of them.
+    * As in Spark's inference with `mergeSchema` off (its default):
     *   - the first data file is the least by full path among the files
-    *     Spark lists — names starting `_` (unless they hold `=`, as
-    *     partition directories may) or `.`, and `._COPYING_` files are
-    *     skipped, subdirectories are recursed into; partition columns are
-    *     not in the footer, Spark appends them from the `k=v` directories;
-    *     summary files (`_metadata`, which Spark no longer writes) are not
-    *     consulted;
+    *     Spark lists under every path — names starting `_` (unless they
+    *     hold `=`, as partition directories may) or `.`, and `._COPYING_`
+    *     files are skipped, subdirectories are recursed into; partition
+    *     columns are not in the footer, Spark appends them from the `k=v`
+    *     directories; summary files (`_metadata`, which Spark no longer
+    *     writes) are not consulted;
     *   - the footer's Spark row metadata (the writer's schema JSON) wins;
     *     without it, or if it does not parse, the parquet schema goes
     *     through Spark's converter under the session's parquet flags (so
     *     `nanosAsLong` still turns TIMESTAMP(NANOS) into a long).
     * A missing path fails as `spark.read` does (`PATH_NOT_FOUND`); no data
     * file and an unreadable footer fail naming the path. */
-  private def footerSchema(spark: SparkSession, p: String): StructType = {
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(p)
-    val fs = root.getFileSystem(conf)
-    val qualified = fs.makeQualified(root).toString
-    val status =
-      try fs.getFileStatus(root)
-      catch {
-        case _: FileNotFoundException =>
-          throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> qualified))
-      }
-    val file = firstDataFile(fs, status).getOrElse(throw new AnalysisException(
-      "UNABLE_TO_INFER_SCHEMA", Map("format" -> s"Parquet at $qualified (no data file)")))
+    val roots = paths.map { p =>
+      val root = new Path(p)
+      val fs = root.getFileSystem(conf)
+      val qualified = fs.makeQualified(root)
+      val first =
+        try firstDataFile(fs, fs.getFileStatus(root))
+        catch {
+          case _: FileNotFoundException => throw new AnalysisException(
+            "PATH_NOT_FOUND", Map("path" -> qualified.toString))
+        }
+      (qualified, first.map(f => (fs.makeQualified(f.getPath), f)))
+    }
+    val file = roots.flatMap(_._2).minByOption(_._1.toString).map(_._2)
+      .getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+        Map("format" -> s"Parquet at ${roots.map(_._1).mkString(", ")} (no data file)")))
     val meta =
       try ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData

@@ -1,15 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Tables
 
-/** Shared listing for the batch-id-generation directory layout
-  * ([[StreamNearDedup]], [[DeadLetter]]): a sink directory holds one
-  * subdirectory per micro-batch, written with idempotent Overwrite so
+/** Listing and reading for the batch-id-generation directory layout
+  * every streaming maintainer keeps its state in: a sink directory holds
+  * one subdirectory per micro-batch, written with idempotent Overwrite so
   * Spark's replay of the last uncommitted batch rewrites it
   * byte-identically; readers consider only `_SUCCESS`-committed
   * generations, so a half-written directory from a crash is invisible
-  * until its replay completes it. */
+  * until its replay completes it. Generations are read through
+  * [[readNames]] / [[readLive]] only, which start no Spark job. */
 private[streaming] object Generations {
 
   def committed(spark: SparkSession, dir: String, prefix: String): Seq[String] = {
@@ -25,23 +27,28 @@ private[streaming] object Generations {
   /** Union-read of an explicit generation-name list (callers that filter
     * the committed set first — e.g. manifest exclusion — share this one
     * path-building site); fails fast on an empty list. Each generation
-    * dir is read as its OWN root and the scans union by name: a
-    * multi-path read would refuse the layout when generations are
-    * `partitionBy`-partitioned (the non-`k=v` `gen-<id>` segment between
-    * the shared parent and the partition dirs reads as a conflicting
-    * directory structure), while per-root reads recover each
-    * generation's partition columns independently. */
+    * dir is read as its OWN root through [[graft.sources.Tables.read]]
+    * (footer schema, no inference job) and the scans union by name. A
+    * multi-root read would refuse `partitionBy` generations (Spark fails
+    * it with `CONFLICTING_DIRECTORY_STRUCTURES`: the non-`k=v` `gen-<id>`
+    * segment sits between the shared parent and the partition dirs),
+    * while per-root reads recover each generation's schema and partition
+    * columns independently; filters on a partition column applied after
+    * the union still reach every scan as `PartitionFilters`. */
   def readNames(spark: SparkSession, dir: String, names: Seq[String],
-      prefix: String): org.apache.spark.sql.DataFrame = {
+      prefix: String = "gen-"): DataFrame = {
     require(names.nonEmpty, s"no committed '$prefix' generations under $dir")
-    names.map(p => spark.read.parquet(s"$dir/$p")).reduce(_.unionByName(_))
+    names.map(n => Tables.read(spark, s"$dir/$n")).reduce(_.unionByName(_))
   }
+
+  /** Union-read of every [[live]] generation; fails fast when none is. */
+  def readLive(spark: SparkSession, dir: String, prefix: String = "gen-"): DataFrame =
+    readNames(spark, dir, live(spark, dir, prefix), prefix)
 
   /** Union-read of every committed generation; fails fast when none has
     * committed yet (callers with a cold-start schema pass a template to
     * their own wrapper instead). */
-  def read(spark: SparkSession, dir: String, prefix: String)
-      : org.apache.spark.sql.DataFrame =
+  def read(spark: SparkSession, dir: String, prefix: String): DataFrame =
     readNames(spark, dir, committed(spark, dir, prefix), prefix)
 
   /** Fold accumulated `gen-<id>` generations under `dir` into one
@@ -58,8 +65,7 @@ private[streaming] object Generations {
     * foreachBatch loop (the `compactEvery` hooks) — the
     * single-maintenance-job contract. */
   def compactFold(spark: SparkSession, dir: String,
-      fold: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        identity): Unit = {
+      fold: DataFrame => DataFrame = identity): Unit = {
     val gens = committed(spark, dir, "gen-")
       .filterNot(_.startsWith("gen-compact-"))
     val priorCompactions = committed(spark, dir, "gen-compact-")
@@ -71,8 +77,7 @@ private[streaming] object Generations {
       val epoch = priorCompactions
         .flatMap(_.stripPrefix("gen-compact-").toLongOption)
         .maxOption.getOrElse(0L) + 1
-      fold(spark.read.parquet(sources.map(g => s"$dir/$g"): _*)
-          .dropDuplicates())
+      fold(Tables.read(spark, sources.map(g => s"$dir/$g"): _*).dropDuplicates())
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$dir/gen-compact-$epoch")
       val f = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -113,12 +118,6 @@ private[streaming] object Generations {
     all.filterNot(folded)
   }
 
-  /** [[live]] joined to full paths, ready for a multi-root parquet read
-    * (each generation dir is its own base path, so `partitionBy` columns
-    * written under it are recovered per root). */
-  def livePaths(spark: SparkSession, dir: String, prefix: String = "gen-"): Seq[String] =
-    live(spark, dir, prefix).map(g => s"$dir/$g")
-
   /** MANIFESTED fold of accumulated `gen-<id>` generations — the
     * compaction discipline for state that is NOT inert under row
     * duplication, where [[compactFold]]'s heal-by-dropDuplicates cannot
@@ -152,7 +151,7 @@ private[streaming] object Generations {
     * `batch-` for landed corpus generations ([[Retention.compactCorpus]]);
     * folds land as `<prefix>compact-<epoch>`. */
   def compactManifested(spark: SparkSession, dir: String,
-      fold: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      fold: DataFrame => DataFrame,
       partitionCols: Seq[String] = Nil, prefix: String = "gen-",
       decorate: Path => Unit = _ => ()): Unit =
     foldManifested(spark, dir, fold, partitionCols, prefix,
@@ -172,7 +171,7 @@ private[streaming] object Generations {
     * corpus the rebuild read). Readers switch old → rebuilt in the one
     * atomic rename every manifested fold commits through. */
   def replaceManifested(spark: SparkSession, dir: String,
-      rebuilt: => org.apache.spark.sql.DataFrame,
+      rebuilt: => DataFrame,
       partitionCols: Seq[String] = Nil, prefix: String = "gen-",
       decorate: Path => Unit = _ => ()): Unit =
     foldManifested(spark, dir, _ => rebuilt, partitionCols, prefix,
@@ -188,7 +187,7 @@ private[streaming] object Generations {
     * together — two separate commits would open a window where a serve
     * probes new cells against old assignments (or vice versa). */
   private def foldManifested(spark: SparkSession, dir: String,
-      fold: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      fold: DataFrame => DataFrame,
       partitionCols: Seq[String], prefix: String,
       includeNewest: Boolean, minSources: Int,
       decorate: Path => Unit = _ => ()): Unit = {

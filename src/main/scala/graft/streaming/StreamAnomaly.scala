@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Analytics
+import graft.sources.Tables
 
 /** Continuously-maintained anomaly baselines — the streaming face of
   * [[graft.operators.Analytics.dailyAnomalies]] (E91), in the repo's
@@ -70,7 +71,7 @@ object StreamAnomaly {
         .flatMap(g => g.stripPrefix("board-").toLongOption.map((_, g)))
         .maxByOption(_._1).map(_._2)
     }.getOrElse(throw new IllegalStateException(s"no committed board under $outDir"))
-    spark.read.parquet(s"$outDir/$gen")
+    Tables.read(spark, s"$outDir/$gen")
   }
 
   /** `compactEvery` (0 = off) runs [[compactState]] every

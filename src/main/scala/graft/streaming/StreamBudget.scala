@@ -45,11 +45,8 @@ object StreamBudget {
   def kept(spark: SparkSession, stateDir: String, budget: Long): DataFrame =
     TextAnalysis.budgetCapRows(liveRows(spark, stateDir), budget)
 
-  private def liveRows(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/rows")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/rows")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-  }
+  private def liveRows(spark: SparkSession, stateDir: String): DataFrame =
+    Generations.readLive(spark, s"$stateDir/rows")
 
   /** Fold the accumulated rows through the absorbing budget cut
     * (manifested — see the object scaladoc). */

@@ -39,11 +39,8 @@ object StreamCap {
   def kept(spark: SparkSession, stateDir: String, cap: Int): DataFrame =
     TextAnalysis.sourceCap(liveRows(spark, stateDir), cap)
 
-  private def liveRows(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/rows")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/rows")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-  }
+  private def liveRows(spark: SparkSession, stateDir: String): DataFrame =
+    Generations.readLive(spark, s"$stateDir/rows")
 
   /** Fold the accumulated rows through the absorbing cap cut
     * (manifested — see the object scaladoc). */

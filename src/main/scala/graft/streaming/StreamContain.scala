@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Continuous CONTAINMENT admission — the streaming face of
   * [[graft.operators.Dedup.incrementalContainmentNew]], the asymmetric
@@ -104,7 +105,7 @@ object StreamContain {
         // index rows derive from the LANDED bytes — a replayed batch
         // re-derives the identical generation
         Dedup.containmentIndexRows(
-          spark.read.parquet(s"$outDir/batch-$id"), idCol, textCol, n)
+          Tables.read(spark, s"$outDir/batch-$id"), idCol, textCol, n)
           .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$own")
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1) {
           StreamNearDedup.compactIndex(spark, indexDir)

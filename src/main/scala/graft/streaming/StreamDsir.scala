@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.GraftFunctions
+import graft.sources.Tables
 
 /** Continuous DSIR admission gating — the streamed form of
   * [[graft.operators.TextAnalysis.dsirSelect]]'s scoring half, the
@@ -31,7 +32,7 @@ object StreamDsir {
 
   /** All landed (doc_id, source, weight) admissions. */
   def admitted(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/rows")
+    Tables.read(spark, s"$outDir/rows")
 
   /** The batch form of the gate, shared by the stream and its spec: score
     * `docs` under `llr` and keep weight ≥ floor. */

@@ -42,11 +42,8 @@ object StreamHist {
       to: String, ps: Seq[Double], width: Double = 25.0): DataFrame =
     Analytics.histQuantiles(liveRows(spark, stateDir), from, to, ps, width)
 
-  private def liveRows(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/rows")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/rows")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-  }
+  private def liveRows(spark: SparkSession, stateDir: String): DataFrame =
+    Generations.readLive(spark, s"$stateDir/rows")
 
   /** Fold accumulated generations to one row per (day, bin) — manifested,
     * see the object scaladoc. */

@@ -113,12 +113,8 @@ object StreamHybrid {
 
   /** Live (manifest-resolved) union of the landed vector generations,
     * tombstoned vectors excluded. */
-  def liveVectors(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/vecs")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/vecs")
-    Retention.filter(paths.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      stateDir, "vec_id")
-  }
+  def liveVectors(spark: SparkSession, stateDir: String): DataFrame =
+    Retention.filter(Generations.readLive(spark, s"$stateDir/vecs"), stateDir, "vec_id")
 
   /** Hybrid top-k over everything the stream has landed so far: BM25
     * from the streamed inverted index ([[StreamSearchIndex.search]] —

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Similarity
-import graft.sources.Landing
+import graft.sources.{Landing, Tables}
 
 /** Continuous IVF-PQ index maintenance — the ANN sibling of
   * [[StreamNearDedup]]: arriving vectors are encoded with the LANDED
@@ -93,7 +93,7 @@ object StreamIvfPq extends Logging {
   def currentCentroids(spark: SparkSession, indexDir: String,
       fallback: => DataFrame): DataFrame =
     quantSidecarPath(spark, indexDir) match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => Tables.read(spark, p)
       case None => fallback
     }
 
@@ -147,7 +147,7 @@ object StreamIvfPq extends Logging {
     val target = math.max(2L, math.round(math.sqrt(n.toDouble)))
     if (!force) {
       val current = quantSidecarPath(spark, indexDir) match {
-        case Some(p) => spark.read.parquet(p).count()
+        case Some(p) => Tables.read(spark, p).count()
         case None if fallbackCentroids != null => fallbackCentroids.count()
         case None =>
           // no sidecar, no caller centroids: the live cell count off the
@@ -157,12 +157,12 @@ object StreamIvfPq extends Logging {
           // every unconditional maintenance call; a parquet-scan +
           // distinct exchange here would tax stores that never
           // resharded on every compaction cadence)
-          val paths = Generations.livePaths(spark, indexDir)
-          if (paths.isEmpty) 0L
+          val gens = Generations.live(spark, indexDir)
+          if (gens.isEmpty) 0L
           else {
             val conf = spark.sessionState.newHadoopConf()
-            paths.flatMap { p =>
-              val hp = new org.apache.hadoop.fs.Path(p)
+            gens.flatMap { g =>
+              val hp = new org.apache.hadoop.fs.Path(s"$indexDir/$g")
               hp.getFileSystem(conf).listStatus(hp).toSeq.collect {
                 case st if st.isDirectory &&
                     st.getPath.getName.startsWith("cell_id=") =>
@@ -187,26 +187,26 @@ object StreamIvfPq extends Logging {
   }
 
   /** Every LIVE committed index generation (manifest-resolved —
-    * [[Generations.live]]), unioned with per-root partition recovery and
-    * optionally pruned to `cells` BEFORE the partition column is
-    * normalized back to long (partition-value inference types the
-    * `cell_id=` directory values as int; the filter runs on the inferred
-    * column so `PartitionFilters` prune, then the cast restores the
-    * batch schema). `template` supplies the (empty) schema before the
-    * first generation commits. */
+    * [[Generations.live]]), unioned with per-root partition recovery
+    * ([[Generations.readNames]]) and optionally pruned to `cells` BEFORE
+    * the partition column is normalized back to long (partition-value
+    * inference types the `cell_id=` directory values as int; the filter
+    * runs on the inferred column, so it reaches every generation's scan
+    * as `PartitionFilters`, then the cast restores the batch schema).
+    * `template` supplies the (empty) schema before the first generation
+    * commits. */
   def currentIndex(spark: SparkSession, indexDir: String,
       template: => DataFrame, cells: Option[Seq[Long]] = None): DataFrame = {
-    val paths = Generations.livePaths(spark, indexDir)
-    if (paths.isEmpty) template
-    else Retention.filter(paths.map { p =>
-      val raw = spark.read.parquet(p)
-      val pruned = cells match {
-        case Some(cs) => raw.filter(col("cell_id").isin(cs: _*))
-        case None => raw
-      }
-      pruned.select(col("vec_id").cast("long"), col("sub").cast("int"),
-        col("code").cast("long"), col("cell_id").cast("long"))
-    }.reduce(_.unionByName(_)), indexDir, "vec_id")
+    val gens = Generations.live(spark, indexDir)
+    if (gens.isEmpty) template
+    else {
+      val all = Generations.readNames(spark, indexDir, gens)
+      val pruned = cells.fold(all)(cs => all.filter(col("cell_id").isin(cs: _*)))
+      Retention.filter(
+        pruned.select(col("vec_id").cast("long"), col("sub").cast("int"),
+          col("code").cast("long"), col("cell_id").cast("long")),
+        indexDir, "vec_id")
+    }
   }
 
   /** Targeted deletion: commit the tombstone generation — every
@@ -230,7 +230,7 @@ object StreamIvfPq extends Logging {
     * newest-fold rule survives ordinary compaction. */
   def compactIndex(spark: SparkSession, indexDir: String): Unit = {
     val sidecar = quantSidecarPath(spark, indexDir)
-      .map(p => spark.read.parquet(p).localCheckpoint())
+      .map(p => Tables.read(spark, p).localCheckpoint())
     Generations.compactManifested(spark, indexDir,
       d => Retention.filter(
         d.select(col("vec_id").cast("long"), col("sub").cast("int"),

@@ -31,7 +31,7 @@ import graft.operators.Sketches
 object StreamKmv {
 
   /** The live folded sketch: (key, h), ≤ k rows per segment. The read is
-    * MANIFEST-RESOLVED ([[Generations.livePaths]]) even though the
+    * MANIFEST-RESOLVED ([[Generations.live]]) even though the
     * bottom-k fold is absorbing under ordinary compaction (a fold read
     * with its sources serves the same answer): the post-deletion REBUILD
     * ([[UnifiedIngest.rebuildSketches]] → [[Generations
@@ -40,11 +40,8 @@ object StreamKmv {
     * with its not-yet-swept sources would resurrect exactly the deleted
     * hashes the rebuild removed. */
   def sketch(spark: SparkSession, stateDir: String,
-      k: Int = Sketches.DefaultK): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/rows")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/rows")
-    Sketches.kmvFold(paths.map(spark.read.parquet(_)).reduce(_.unionByName(_)), k)
-  }
+      k: Int = Sketches.DefaultK): DataFrame =
+    Sketches.kmvFold(Generations.readLive(spark, s"$stateDir/rows"), k)
 
   /** Serve: per-segment distinct estimates off live state alone. */
   def estimates(spark: SparkSession, stateDir: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Continuous k-NN GRAPH maintenance — the streamed form of the batch
   * [[Similarity.knnGraph]] (E144), i.e. the incremental build behind an
@@ -56,11 +57,8 @@ object StreamKnn {
   def graph(spark: SparkSession, stateDir: String, nn: Int): DataFrame =
     Similarity.knnCut(liveEdges(spark, stateDir), nn)
 
-  private def liveEdges(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/edges")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/edges")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-  }
+  private def liveEdges(spark: SparkSession, stateDir: String): DataFrame =
+    Generations.readLive(spark, s"$stateDir/edges")
 
   /** Density-based pruning served FROM THE MAINTAINED GRAPH — the E148
     * decision without a batch graph build: density = mean edge score of
@@ -78,9 +76,7 @@ object StreamKnn {
       .agg(round(avg(col("score")), 6).as("density"))
     val cutoff = dens.agg(
       round(percentile(col("density"), lit(1.0 - pct)), 6).as("cutoff"))
-    val paths = Generations.livePaths(spark, s"$stateDir/asg")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/asg")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    Generations.readLive(spark, s"$stateDir/asg")
       .select("vec_id").distinct()
       .join(dens, Seq("vec_id"), "left_outer")
       .crossJoin(broadcast(cutoff))
@@ -106,12 +102,8 @@ object StreamKnn {
 
   /** Every arrived vector (the live assignment index) — the vertex set
     * each graph-analytics serve runs over. */
-  private def liveVertices(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/asg")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/asg")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .select("vec_id").distinct()
-  }
+  private def liveVertices(spark: SparkSession, stateDir: String): DataFrame =
+    Generations.readLive(spark, s"$stateDir/asg").select("vec_id").distinct()
 
   /** Community discovery served FROM THE MAINTAINED GRAPH — the
     * [[graft.operators.GraphRank.labelPropagation]] tail over the served
@@ -184,11 +176,10 @@ object StreamKnn {
           .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/asg/$own")
         // re-read the landed bytes so a replayed batch derives the
         // identical edge generation from identical inputs
-        val batchAsg = spark.read.parquet(s"$stateDir/asg/$own")
-        val old = Generations.livePaths(spark, s"$stateDir/asg")
-          .filterNot(_.endsWith(s"/$own")) match {
+        val batchAsg = Tables.read(spark, s"$stateDir/asg/$own")
+        val old = Generations.live(spark, s"$stateDir/asg").filterNot(_ == own) match {
           case Seq() => batchAsg.limit(0)
-          case ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+          case gens => Generations.readNames(spark, s"$stateDir/asg", gens)
         }
         val cross = batchAsg
           .select(col("cell_id"), col("vec_id").as("n_id"),

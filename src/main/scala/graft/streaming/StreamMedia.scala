@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Multimodal
+import graft.sources.Tables
 
 /** Continuous PERCEPTUAL media dedup — the streaming face of
   * [[graft.operators.Multimodal.incrementalMediaNew]], completing the
@@ -113,7 +114,7 @@ object StreamMedia {
         // signatures derive from the LANDED bytes, so a replayed batch
         // re-derives the identical generation
         Multimodal.buildMediaSigIndex(
-          spark.read.parquet(s"$outDir/batch-$id"), idCol, payloadCol)
+          Tables.read(spark, s"$outDir/batch-$id"), idCol, payloadCol)
           .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$own")
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1) {
           compactIndex(spark, indexDir)

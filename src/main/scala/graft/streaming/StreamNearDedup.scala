@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Continuous NEAR-duplicate dedup — the streaming face of
   * [[graft.operators.Dedup.incrementalNearNew]], closing the gap
@@ -53,12 +52,7 @@ import graft.operators.Dedup
   * [[graft.operators.Dedup.buildNearDupIndex]] output to any
   * `gen-*`-named directory under `indexDir` before starting.
   */
-object StreamNearDedup extends Logging {
-
-  private def committedGens(spark: SparkSession, dir: String,
-      prefix: String): Seq[String] = Generations.committed(spark, dir, prefix)
-  // (kept as a named local alias: every listing in this file is
-  // generation-layout listing, and the name documents that)
+object StreamNearDedup {
 
   /** Every committed signature generation, unioned, tombstoned docs
     * excluded ([[Retention]] — a DELETED document's signature must stop
@@ -67,7 +61,7 @@ object StreamNearDedup extends Logging {
     * (empty) schema before the first generation commits. */
   def currentIndex(spark: SparkSession, indexDir: String,
       template: => DataFrame, exclude: Set[String] = Set.empty): DataFrame = {
-    val gens = committedGens(spark, indexDir, "gen-").filterNot(exclude)
+    val gens = Generations.committed(spark, indexDir, "gen-").filterNot(exclude)
     if (gens.isEmpty) template
     else Retention.filter(
       Generations.readNames(spark, indexDir, gens, "gen-"),
@@ -97,57 +91,16 @@ object StreamNearDedup extends Logging {
     * the signature-index instance of the small-file pathology
     * [[graft.sources.Compaction]] exists for (a long-running stream
     * leaves one tiny directory per batch; probe planning then pays
-    * per-file open cost on every micro-batch). Writes the union of all
-    * currently-committed generations as a single new generation, THEN
-    * deletes the sources — a crash between the two steps leaves
-    * duplicated signature rows, which are semantically inert here: the
-    * probe's candidate set is `distinct()`ed before verification, so
-    * duplicate index rows can only re-propose the same candidate pair.
-    * Maintenance op: run while the stream is stopped or between triggers
-    * (deleting a generation out from under an in-flight probe read is
-    * the one unsafe interleaving). */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val gens = committedGens(spark, indexDir, "gen-")
-      .filterNot(_.startsWith("gen-compact-"))
-    val priorCompactions = committedGens(spark, indexDir, "gen-compact-")
-    // NEVER fold the newest batch generation: if the stream crashed after
-    // writing gen-<id> but before committing the checkpoint, that batch
-    // will be REPLAYED — start() keeps it out of its own probe index by
-    // NAME, which only works while its rows still live under that name.
-    // Folding them into gen-compact-* would make the replayed batch find
-    // its own signatures (Jaccard 1.0) and drop every one of its rows as
-    // duplicates of themselves — silent loss of the whole batch.
-    val newestBatchGen = gens
-      .flatMap(g => g.stripPrefix("gen-").toLongOption.map((_, g)))
-      .maxByOption(_._1).map(_._2)
-    val sources = priorCompactions ++ gens.filterNot(newestBatchGen.contains)
-    if (sources.size > 1) {
-      val epoch = priorCompactions
-        .flatMap(_.stripPrefix("gen-compact-").toLongOption)
-        .maxOption.getOrElse(0L) + 1
-      // dropDuplicates makes an interrupted compaction self-healing: a
-      // crash between the write and the deletes below leaves the folded
-      // rows present twice (gen-compact-<e> ∪ its sources) as EXACT
-      // duplicates; the NEXT compaction would otherwise snowball them
-      // forever. FULL-row dedup deliberately, not doc_id: if a producer
-      // ever reuses a doc_id with different text across batches, both
-      // payloads survive compaction, so neither document's future
-      // near-arrivals can silently sail past the probe index.
-      // tombstoned docs drop from the fold — Retention's physical-purge
-      // half (serve-side filtering already excluded them)
-      Retention.filter(
-          spark.read.parquet(sources.map(g => s"$indexDir/$g"): _*)
-            .dropDuplicates(),
-          indexDir, "doc_id")
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$indexDir/gen-compact-$epoch")
-      val f = new Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      sources.foreach(g => f.delete(new Path(indexDir, g), true))
-      logInfo(s"compacted ${sources.size} index generations into " +
-        s"gen-compact-$epoch under $indexDir")
-    }
-  }
+    * per-file open cost on every micro-batch). The shared self-healing
+    * fold ([[Generations.compactFold]]): the newest batch generation is
+    * never folded, so a replayed batch keeps its own signatures out of
+    * its probe index by name; a crash between the fold write and the
+    * source deletes leaves duplicated signature rows, which are inert
+    * here (the probe's candidate set is `distinct()`ed before
+    * verification) and collapse at the next fold. Tombstoned docs drop
+    * from the fold — [[Retention]]'s physical-purge half. */
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    Generations.compactFold(spark, indexDir, Retention.filter(_, indexDir, "doc_id"))
 
   /** Start cleaning `docs` (a streaming DataFrame carrying `idCol` and
     * `textCol`) into `outDir`, growing the signature index at `indexDir`.
@@ -186,7 +139,7 @@ object StreamNearDedup extends Logging {
         // signatures are derived from the LANDED bytes, so a replayed
         // batch re-derives the identical generation
         Dedup.buildNearDupIndex(
-          spark.read.parquet(s"$outDir/batch-$id"), idCol, textCol, n, k, seed)
+          Tables.read(spark, s"$outDir/batch-$id"), idCol, textCol, n, k, seed)
           .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$own")
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1) {
           compactIndex(spark, indexDir)

@@ -224,7 +224,7 @@ object StreamSearchIndex {
         Seq("doc_id"), "left_anti"))
       .getOrElse(fresh0)
     val lensLive =
-      if (Generations.livePaths(spark, s"$indexDir/lens").isEmpty)
+      if (Generations.live(spark, s"$indexDir/lens").isEmpty)
         Seq.empty[(Long, Int)].toDF("doc_id", "dl")
       else readSide(spark, s"$indexDir/lens", None)
     lensLive.join(broadcast(fresh), Seq("doc_id"))
@@ -236,23 +236,16 @@ object StreamSearchIndex {
   }
 
   /** Live (manifest-resolved) union of one side's generations, each dir
-    * read as its own root; for the term-bucketed sides, `bkts` prunes
-    * each scan's partitions BEFORE the recovered partition column is
-    * dropped from the result. Per-doc sides exclude tombstoned documents
+    * read as its own root ([[Generations.readLive]]); for the
+    * term-bucketed sides, `bkts` filters the union BEFORE the recovered
+    * partition column is dropped, which prunes every scan's partitions. Per-doc sides exclude tombstoned documents
     * ([[Retention.filter]] — the serve-side half of [[delete]]); the
     * stats side must NOT filter (deletion reaches it as the negative
     * delta generations instead). */
   private def readSide(spark: SparkSession, dir: String,
       bkts: Option[Seq[Int]], tombRoot: Option[String] = None): DataFrame = {
-    val paths = Generations.livePaths(spark, dir)
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $dir")
-    val u = paths.map { p =>
-      val raw = spark.read.parquet(p)
-      bkts match {
-        case Some(bs) => raw.filter(col("bkt").isin(bs: _*)).drop("bkt")
-        case None => raw
-      }
-    }.reduce(_.unionByName(_))
+    val all = Generations.readLive(spark, dir)
+    val u = bkts.fold(all)(bs => all.filter(col("bkt").isin(bs: _*)).drop("bkt"))
     tombRoot.map(r => Retention.filter(u, r, "doc_id")).getOrElse(u)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Dedup, Similarity}
+import graft.sources.Tables
 
 /** Continuous SEMANTIC arrival dedup — the third member of the streaming
   * hygiene triple next to [[StreamClean]] (exact fingerprints) and
@@ -96,7 +97,7 @@ object StreamSemantic {
         batch.join(survivorIds, Seq("vec_id"))
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch-$id")
         Similarity.ivfAssignHierWith(
-            spark.read.parquet(s"$outDir/batch-$id"), coarseLive, grouped)
+            Tables.read(spark, s"$outDir/batch-$id"), coarseLive, grouped)
           .select(col("vec_id"), col("cell_id"), col("embedding"))
           .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$own")
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)

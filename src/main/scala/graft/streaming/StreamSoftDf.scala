@@ -51,12 +51,9 @@ object StreamSoftDf {
   }
 
   private def liveRows(spark: SparkSession, stateDir: String,
-      exclude: Set[String] = Set.empty): DataFrame = {
-    val paths = Generations.live(spark, s"$stateDir/rows")
-      .filterNot(exclude).map(g => s"$stateDir/rows/$g")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/rows")
-    paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-  }
+      exclude: Set[String] = Set.empty): DataFrame =
+    Generations.readNames(spark, s"$stateDir/rows",
+      Generations.live(spark, s"$stateDir/rows").filterNot(exclude))
 
   /** Serve: first-occurrence novelty for an ARRIVING batch against the
     * maintained state ([[graft.operators.Dedup.noveltyScores]]'s

@@ -5,6 +5,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Cdc
+import graft.sources.Tables
 
 /** Streaming snapshot maintenance — the streaming face of
   * [[graft.operators.Cdc]]: fold a keyed I/U/D change stream into a
@@ -67,7 +68,7 @@ object StreamUpsert extends Logging {
     * generation committed yet — use the overload with a template for
     * cold starts). */
   def currentSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(snapshotDir + "/" +
+    Tables.read(spark, snapshotDir + "/" +
       latestGen(spark, snapshotDir).getOrElse(
         throw new IllegalStateException(s"no committed snapshot under $snapshotDir")))
 
@@ -109,7 +110,7 @@ object StreamUpsert extends Logging {
         throw new IllegalStateException(
           s"no committed generation ≤ $batchId under $snapshotDir " +
             s"(retained: ${ids.mkString(",")})"))
-      try return spark.read.parquet(s"$snapshotDir/gen-$hit")
+      try return Tables.read(spark, s"$snapshotDir/gen-$hit")
       catch {
         // schema resolution is eager: a pruned-under-us directory
         // surfaces here; re-list and fall forward
@@ -144,7 +145,7 @@ object StreamUpsert extends Logging {
           val baseCols = batch.columns.toSeq
             .filterNot(c => seqCols.contains(c) || c == opCol)
           val base = latestGen(spark, snapshotDir) match {
-            case Some(g) => spark.read.parquet(s"$snapshotDir/$g")
+            case Some(g) => Tables.read(spark, s"$snapshotDir/$g")
             case None    => batch.select(baseCols.map(batch(_)): _*).limit(0)
           }
           val prev = latestGen(spark, snapshotDir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{Analytics, Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
+import graft.sources.Tables
 
 /** ONE-LOOP unified ingest — the operational composition the separate
   * Stream* maintainers imply but, individually, never demonstrate: a
@@ -205,7 +206,7 @@ object UnifiedIngest {
         // indexBatch rule), and empty gate generations add nothing.
         admitted.write.mode(SaveMode.Overwrite)
           .parquet(s"$stateDir/corpus/batch-$id")
-        val landed = spark.read.parquet(s"$stateDir/corpus/batch-$id")
+        val landed = Tables.read(spark, s"$stateDir/corpus/batch-$id")
         if (!landed.isEmpty) {
         val vecs = landed.select(col("doc_id").as("vec_id"), col("embedding"))
         landed.select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
@@ -340,12 +341,8 @@ object UnifiedIngest {
 
   /** Live (manifest-resolved) landed vectors, tombstoned ids
     * excluded — the re-shard's retrain input. */
-  def liveVectors(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/vecs")
-    require(paths.nonEmpty, s"no committed 'gen-' generations under $stateDir/vecs")
-    Retention.filter(paths.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      stateDir, "vec_id")
-  }
+  def liveVectors(spark: SparkSession, stateDir: String): DataFrame =
+    Retention.filter(Generations.readLive(spark, s"$stateDir/vecs"), stateDir, "vec_id")
 
   /** POST-DELETION SKETCH REBUILD — the automation for the documented
     * rebuild-only classes ([[Retention]]'s scaladoc): a KMV sketch
@@ -483,12 +480,8 @@ object UnifiedIngest {
     * layout exactly as the batch operator on the remaining corpus. */
   def tokenBlockManifest(spark: SparkSession, stateDir: String,
       blockSize: Int = 128): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/budget/rows")
-    require(paths.nonEmpty,
-      s"no committed 'gen-' generations under $stateDir/budget/rows")
     val counts = Retention.filter(
-      paths.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      stateDir, "doc_id")
+      Generations.readLive(spark, s"$stateDir/budget/rows"), stateDir, "doc_id")
     graft.operators.Packing.tokenBlocksFromCounts(
       counts.select(col("doc_id"), col("n_tokens").as("n")), blockSize)
   }
@@ -510,17 +503,13 @@ object UnifiedIngest {
     * admitted union under the arrival contract (the serve ≡ batch law,
     * UnifiedIngestSpec). After deletions, serve the rebuilt state
     * ([[rebuildSketches]] — this side is rebuild-only, like KMV). */
-  def curationReport(spark: SparkSession, stateDir: String): DataFrame = {
-    val paths = Generations.livePaths(spark, s"$stateDir/curation/rows")
-    require(paths.nonEmpty,
-      s"no committed 'gen-' generations under $stateDir/curation/rows")
+  def curationReport(spark: SparkSession, stateDir: String): DataFrame =
     TextAnalysis.curationReportTail(
-      paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+      Generations.readLive(spark, s"$stateDir/curation/rows")
         .groupBy("source").agg(
           sum("n_docs").as("n_docs"), sum("n_dups").as("n_dups"),
           sum("tokens_sum").as("tokens_sum"), sum("n_keep").as("n_keep"),
           sum("g_sum").as("g_sum"), sum("nov_sum").as("nov_sum")))
-  }
 
   /** Serve: DoReMi-class domain mixing weights off the MAINTAINED LM
     * state ([[graft.operators.TextAnalysis.domainReweightFromModel]]
@@ -533,12 +522,7 @@ object UnifiedIngest {
     * [[rebuildSketches]]). */
   def domainWeights(spark: SparkSession, stateDir: String,
       eta: Double = 1.0): DataFrame = {
-    def live(sub: String): DataFrame = {
-      val paths = Generations.livePaths(spark, s"$stateDir/lm/$sub")
-      require(paths.nonEmpty,
-        s"no committed 'gen-' generations under $stateDir/lm/$sub")
-      paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-    }
+    def live(sub: String): DataFrame = Generations.readLive(spark, s"$stateDir/lm/$sub")
     TextAnalysis.domainReweightFromModel(
       live("model").groupBy("source", "l", "r").agg(sum("n").as("n")),
       live("vocab"),

@@ -108,6 +108,17 @@ class LandedArtifactLayoutSpec extends SparkTestBase {
     }
   }
 
+  test("a warm ensureHalves call reads both landed halves with 0 jobs") {
+    val artifact = s"halves_law_${java.util.UUID.randomUUID().toString.take(8)}"
+    val cold = Landing.ensureHalves(spark, artifact)(i =>
+      spark.range(i * 10L, i * 10L + 5).toDF("id"))
+    val (warm, jobs) = jobsDuring(spark)(
+      Landing.ensureHalves(spark, artifact)(_ => fail("a warm call must not rebuild")))
+    assert(jobs == 0, s"warm ensureHalves started $jobs job(s)")
+    assert(warm.schema == cold.schema)
+    assert(warm.collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L) ++ (10L until 15L))
+  }
+
   test("Landing.key digests the UTF-8 bytes of a non-ASCII dir") {
     val nonAscii = "/données/корпус"
     assert(md5(nonAscii) == "e1cf6351514b5dd1")

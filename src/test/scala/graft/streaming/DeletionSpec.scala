@@ -77,7 +77,7 @@ class DeletionSpec extends SparkTestBase {
     // byte-identically because no fold can have purged the lens rows)
     val extra = Seq(batches(0)(7)._1)
     val lens = spark.read.parquet(
-      Generations.livePaths(spark, s"$indexDir/lens"): _*)
+      Generations.live(spark, s"$indexDir/lens").map(g => s"$indexDir/lens/$g"): _*)
     lens.filter(col("doc_id").isin(extra: _*))
       .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
         (coalesce(sum(col("dl")), lit(0L)) * lit(-1L)).as("dl_sum"))
@@ -95,7 +95,8 @@ class DeletionSpec extends SparkTestBase {
     // generations; serves unchanged
     StreamSearchIndex.compactIndex(spark, indexDir)
     val allDeleted = deleted ++ extra
-    val foldedPostings = Generations.livePaths(spark, s"$indexDir/postings")
+    val foldedPostings = Generations.live(spark, s"$indexDir/postings")
+      .map(g => s"$indexDir/postings/$g")
       .filter(_.contains("gen-compact-"))
     assert(foldedPostings.nonEmpty, "expected a postings fold")
     assert(spark.read.parquet(foldedPostings: _*)
@@ -161,7 +162,7 @@ class DeletionSpec extends SparkTestBase {
 
     // physical purge at compaction, law unchanged
     StreamIvfPq.compactIndex(spark, indexDir)
-    val folded = Generations.livePaths(spark, indexDir)
+    val folded = Generations.live(spark, indexDir).map(g => s"$indexDir/$g")
       .filter(_.contains("gen-compact-"))
     assert(folded.nonEmpty, "expected a code fold")
     assert(spark.read.parquet(folded: _*)
