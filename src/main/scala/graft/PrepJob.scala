@@ -196,7 +196,7 @@ object PrepJob {
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "pos", "pack_pos")
       .write.mode("overwrite").partitionBy("shard").parquet(outPath)
-    spark.read.parquet(outPath).count()
+    Tables.read(spark, outPath).count()
   }
 
   /** MULTIMODAL training shards — the [[trainingShards]] tail over the
@@ -229,7 +229,7 @@ object PrepJob {
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "pos", "pack_pos")
       .write.mode("overwrite").partitionBy("shard").parquet(outPath)
-    spark.read.parquet(outPath).count()
+    Tables.read(spark, outPath).count()
   }
 
   /** Run the pipeline and land it partitioned by language. Returns the
@@ -237,7 +237,7 @@ object PrepJob {
   def run(spark: SparkSession, dir: String, outPath: String): Long = {
     val out = prepare(spark, dir)
     out.write.mode("overwrite").partitionBy("lang").parquet(outPath)
-    spark.read.parquet(outPath).count()
+    Tables.read(spark, outPath).count()
   }
 
   def main(args: Array[String]): Unit = {

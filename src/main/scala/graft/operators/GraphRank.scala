@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.sources.{Landing, Tables}
 
@@ -33,78 +38,92 @@ import graft.sources.{Landing, Tables}
   *    keep only 3–4 significant digits of a value whose cross-engine
   *    drift is ~10⁻¹⁶ absolute.
   *
-  * Scale shape (the part that must survive 1000 executors): the weighted
-  * edge list is hash-partitioned by `src` ONCE and persisted — the
-  * corpus-sized side never moves again; each iteration shuffles only the
-  * rank VECTOR (|V| rows, two narrow columns) into the edge partitioning,
-  * and the contribution `groupBy(dst)` is a two-phase hash aggregate
-  * (map-side partials combine the ≤nn contributions per dst inside each
-  * edge partition before the exchange). The dangling mass is a 1-row
-  * aggregate broadcast back (the adjudicated 1-row-BNLJ class, one per
-  * iteration); n is a driver scalar (the bounded trainer-literal class —
-  * one long). Nothing corpus-sized is ever collected, sorted globally,
-  * or re-partitioned per iteration.
+  * Scale shape (the part that must survive 1000 executors): the
+  * iteration state lives in pair RDDs under ONE `HashPartitioner` whose
+  * partition count is the edge input's own. The out-adjacency
+  * (`src → dst[]`) is grouped into it once and persisted, and the vertex
+  * state (`vec_id → (rank, hasOutEdges)`) is kept in it, so the
+  * rank/adjacency join is narrow: the edge relation never moves after
+  * the first job. Each iteration's only shuffle is the contribution
+  * `reduceByKey` (map-side combined) into the same partitioner, and its
+  * only job is the pin's action, which also returns each partition's
+  * dangling-rank sum; the driver adds those in partition order, so Dₜ
+  * (and n, from the first pin) are deterministic for any partition
+  * count. A DataFrame cannot do this: a pinned DataFrame reports
+  * `UnknownPartitioning` under AQE, so every iteration would re-ship the
+  * edge relation. Nothing corpus-sized is ever collected or globally
+  * sorted.
   */
 object GraphRank {
 
-  /** Power-method PageRank over an explicit edge list.
+  /** The engine's pin rule for iteration state, at the RDD layer: mark
+    * `rdd` (reliable `checkpoint()` when the session has a checkpoint dir,
+    * `localCheckpoint()` otherwise) and run `f` over every partition in
+    * the one job that materializes it (a reliable checkpoint then writes
+    * in a second job). Returns the per-partition results in partition
+    * order. */
+  private def pin[T, U: ClassTag](rdd: RDD[T])(f: Iterator[T] => U): Array[U] = {
+    if (rdd.context.getCheckpointDir.isDefined) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd.context.runJob(rdd, f)
+  }
+
+  /** The edge input as `(src, dst)` pairs, and the partitioner every
+    * iteration of a kernel shares: the input's own partition count (at
+    * least 1). */
+  private def edgePairs(edges: DataFrame): (RDD[(Long, Long)], HashPartitioner) = {
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+    (e, new HashPartitioner(math.max(1, e.getNumPartitions)))
+  }
+
+  private def vertexIds(vertices: DataFrame): RDD[Long] =
+    vertices.select(col("vec_id").cast("long")).queryExecution.toRdd.map(_.getLong(0))
+
+  /** `(vec_id, name)` pairs back as a DataFrame; `vec_id` keeps the
+    * vertex input's nullability. */
+  private def toFrame[V](vertices: DataFrame, rdd: RDD[(Long, V)], name: String,
+      tpe: DataType): DataFrame =
+    vertices.sparkSession.createDataFrame(rdd.map(p => Row(p._1, p._2)), StructType(Seq(
+      vertices.schema("vec_id").copy(dataType = LongType), StructField(name, tpe, false))))
+
+  /** Power-method PageRank over an explicit edge list: one job pins the
+    * vertex flags (and returns n), then one job per iteration; an edge
+    * input that is not pinned adds its own build.
     *
     * @param vertices one row per vertex, column `vec_id`
     * @param edges    directed edges, columns `src`, `dst` (weights are
-    *                 derived: 1/outdeg(src))
+    *                 derived: 1/outdeg(src); a duplicate edge counts
+    *                 twice)
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int = 5,
       damping: Double = 0.85): DataFrame = {
-    // vertex count as a plan literal: one driver-side long (the bounded
-    // collect class) — (1-d)/n and 1/n must be SINGLE divisions so the
-    // oracle's doubles match bit-for-bit
-    val n = vertices.count()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // the corpus-sized relation: partitioned by src once, reused by
-    // every iteration's rank join (only the rank vector shuffles after
-    // this point)
-    val e = edges.join(deg, Seq("src"))
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // per-iteration pin (the connectedComponents convention, applied
-    // unconditionally — lazy audit included): rₜ feeds BOTH the next
-    // dangling scalar and the next contribution join, so an unpinned
-    // recurrence doubles the plan (and the executed work) every
-    // iteration — 2^iters replays of the graph build. Pinning cuts the
-    // lineage to the materialized rank vector (|V| rows, two columns),
-    // which is also why the audited plan shows one iteration over a
-    // pinned leaf rather than the unrolled recurrence.
-    val sc = vertices.sparkSession.sparkContext
-    def pin(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    // the no-out-edge vertex set is iteration-invariant — pin it once
-    // (off the persisted e, not the raw edge plan) so the per-iteration
-    // dangling-mass job reads a materialized |V|-bounded leaf instead of
-    // re-aggregating whatever lazy derivation the caller passed as edges
-    val srcSet = pin(e.select(col("src").as("vec_id")).distinct())
-    var ranks = vertices.select(col("vec_id"), lit(1.0 / n).as("rank"))
+    val (e, part) = edgePairs(edges)
+    val adj = e.groupByKey(part).mapValues(_.toArray).persist(StorageLevel.MEMORY_AND_DISK)
+    // vec_id → hasOutEdges; its pin returns each partition's (vertices,
+    // dangling vertices), so n costs no job of its own
+    val flags = vertexIds(vertices).map((_, ())).cogroup(adj, part)
+      .flatMapValues { case (vs, out) => vs.map(_ => out.nonEmpty) }
+    val counts = pin(flags)(_.foldLeft((0L, 0L))((c, f) => (c._1 + 1, c._2 + (if (f._2) 0 else 1))))
+    // (1-d)/n and 1/n are SINGLE divisions so the oracle's doubles match
+    // bit-for-bit; D₀ is the uniform start's dangling mass
+    val n = counts.map(_._1).sum
+    val base = (1.0 - damping) / n
+    var state = flags.mapValues(has => (1.0 / n, has))
+    var dmass = counts.map(_._2 * (1.0 / n)).sum
     for (_ <- 1 to iters) {
-      // dangling mass: rank stranded on vertices with no out-edges
-      val dang = ranks.join(srcSet, Seq("vec_id"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      val contribs = e
-        .join(ranks.withColumnRenamed("vec_id", "src"), Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("w") * col("rank")).as("contrib"))
-      ranks = pin(vertices.select(col("vec_id"))
-        .join(contribs.withColumnRenamed("dst", "vec_id"),
-          Seq("vec_id"), "left_outer")
-        .crossJoin(broadcast(dang))
-        .select(col("vec_id"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("contrib"), lit(0.0)) +
-              col("dmass") / lit(n.toDouble))).as("rank")))
+      val dn = dmass / n.toDouble
+      val contribs = adj.join(state, part).flatMap { case (_, (out, (rank, _))) =>
+        val w = 1.0 / out.length
+        out.iterator.map(dst => (dst, w * rank))
+      }.reduceByKey(part, _ + _)
+      state = state.leftOuterJoin(contribs, part).mapValues {
+        case ((_, has), c) => (base + damping * (c.getOrElse(0.0) + dn), has)
+      }
+      dmass = pin(state)(_.collect { case (_, (rank, false)) => rank }.sum).sum
     }
-    val out = ranks.select(col("vec_id"), round(col("rank"), 9).as("rank"))
-    if (!sys.props.get("graft.dedup.lazyPlans").contains("true")) e.unpersist()
-    out
+    adj.unpersist(blocking = false)
+    toFrame(vertices, state.mapValues(_._1), "rank", DoubleType)
+      .select(col("vec_id"), round(col("rank"), 9).as("rank"))
   }
 
   /** CORRECTNESS instantiation: PageRank over the TRAINED k-NN graph
@@ -156,45 +175,37 @@ object GraphRank {
     *    convergence test costs a full pass per round and would make the
     *    oracle unexpressible as a finite unroll).
     *
-    * Scale shape: the symmetrized edge list is hash-partitioned by `dst`
-    * ONCE and persisted (the vote join's key — the corpus-sized side
-    * never moves again); each iteration shuffles the |V|-row label
-    * vector into the edge partitioning, the vote count is a two-phase
-    * hash aggregate on (voter-target, label), and the argmax is one
-    * window rank per vertex. Labels are pinned per iteration (the
-    * [[pageRank]] recurrence discipline — an unpinned chain doubles the
-    * executed plan every round). Nothing corpus-sized is collected or
-    * globally sorted. */
+    * Scale shape: the symmetrized, deduplicated neighbour set of each
+    * vertex (`dst → src[]`) is grouped once into the [[pageRank]]
+    * partitioner and persisted, so the label/neighbour join is narrow.
+    * Each iteration has one shuffle: every vote (each neighbour's
+    * current label, plus the self-vote) goes to its voter, and the
+    * per-label counts and their (count DESC, label ASC) argmax run on
+    * the reduce side. Labels are pinned per iteration
+    * (the [[pageRank]] rule: one job each — an unpinned chain doubles
+    * the executed plan every round). Nothing corpus-sized is collected
+    * or globally sorted. */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
       iters: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("dst"))
+    val (e, part) = edgePairs(edges)
+    // each vertex's neighbours: a vote travels along every distinct
+    // (src, dst) of the symmetrized edge set, so a mutual edge votes once
+    // per direction
+    val nbrs = e.flatMap { case (s, d) => Iterator((d, s), (s, d)) }
+      .groupByKey(part).mapValues(_.toArray.distinct)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val sc = vertices.sparkSession.sparkContext
-    def pin(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    var labels = vertices.select(col("vec_id"), col("vec_id").as("label"))
+    var labels = vertexIds(vertices).map(v => (v, v))
     for (_ <- 1 to iters) {
-      val votes = und
-        .join(labels.withColumnRenamed("vec_id", "dst"), Seq("dst"))
-        .select(col("src").as("vec_id"), col("label"))
-        .unionByName(labels)
-        .groupBy(col("vec_id"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      labels = pin(votes
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"))
-            .orderBy(col("cnt").desc, col("label").asc)))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("label")))
+      labels = labels.cogroup(nbrs, part)
+        .flatMap { case (v, (ls, ns)) =>
+          ls.iterator.flatMap(l => Iterator((v, l)) ++ ns.iterator.flatten.map((_, l)))
+        }
+        .groupByKey(part)
+        .mapValues(_.groupMapReduce(identity)(_ => 1L)(_ + _).minBy { case (l, c) => (-c, l) }._1)
+      pin(labels)(_.size)
     }
-    val out = labels.select(col("vec_id"), col("label").as("community"))
-    if (!sys.props.get("graft.dedup.lazyPlans").contains("true")) und.unpersist()
-    out
+    nbrs.unpersist(blocking = false)
+    toFrame(vertices, labels, "community", LongType)
   }
 
   /** CORRECTNESS instantiation: LPA over the TRAINED k-NN graph (same

@@ -748,27 +748,22 @@ object Similarity {
     * per-iteration coarse training — ~25 job floors at sf0.1) and
     * exact; above it the two-level pruned recurrence
     * ([[kmeansCentroidsHier]]) is the only one that stays runnable
-    * (flat is O(iters·N·k) with a k∝N broadcast side). The count is
-    * folded into the init job both trainers already pay: the seed frame
-    * is materialized ONCE (eager localCheckpoint — the single corpus
-    * scan), the count reads the cached k-row frame (a job floor, not a
-    * scan — the round-16 nit), and the chosen recurrence iterates from
-    * that same frame. `flatMaxSeeds` is parameterized only so the
+    * (flat is O(iters·N·k) with a k∝N broadcast side). The dispatch and
+    * the flat path's seed fetch are ONE bounded read of the seed frame,
+    * `limit(flatMaxSeeds + 1).collect()`: at or below the bound the
+    * collected rows ARE the full seed set and the flat recurrence starts
+    * from driver arrays with no pin and no further job. Only the hier
+    * dispatch pins the frame (one eager localCheckpoint) for its
+    * distributed iterations; there the bounded read and the pin each
+    * scan the corpus, but `CollectLimit` stops once it holds
+    * flatMaxSeeds + 1 rows. `flatMaxSeeds` is parameterized only so the
     * dispatch-boundary law is spec-testable; production callers take
     * the pinned default. */
   def kmeansCentroidsAuto(emb: DataFrame, initEvery: Int = 29,
       iters: Int = 3, flatMaxSeeds: Long = FlatTrainerMaxSeeds): DataFrame = {
-    val init = seedInit(emb, initEvery).localCheckpoint()
-    // dispatch + flat-path seed fetch in ONE bounded read (r18): a
-    // limit(flatMaxSeeds + 1) collect answers "seeds ≤ flatMaxSeeds?"
-    // exactly like the r16 count job did (same pinned frame, same
-    // count), and when the answer is yes the collected rows ARE the full
-    // seed set — the flat recurrence starts from driver arrays with no
-    // further collect. When the answer is no, at most flatMaxSeeds + 1
-    // rows were pulled (the bounded-collect class), and the hier
-    // recurrence proceeds distributed as before.
+    val seeds = seedInit(emb, initEvery)
     val lim = math.min(flatMaxSeeds + 1L, Int.MaxValue.toLong).toInt
-    val head = init.select(col("cell_id").cast("long"), col("c_emb"))
+    val head = seeds.select(col("cell_id").cast("long"), col("c_emb"))
       .limit(lim).collect()
     if (head.length <= flatMaxSeeds) {
       val rows = head.filter(_.get(1) != null)
@@ -776,7 +771,7 @@ object Similarity {
       val (oids, ovecs) =
         kmeansIterFlatArrays(emb, rows.map(_._1), rows.map(_._2), iters)
       centArraysToDf(emb.sparkSession, oids, ovecs)
-    } else kmeansIterHier(emb, init, iters)
+    } else kmeansIterHier(emb, seeds.localCheckpoint(), iters)
   }
 
   def topKCosineIvf(spark: SparkSession, dir: String, k: Int = 5, nprobe: Int = 4): DataFrame = {

@@ -11,10 +11,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
   *
   * The law takes the least compile count over up to three warm runs: an
   * evicted class recompiles on every run, so eviction keeps that minimum
-  * above zero, while the occasional run-to-run miss Spark pays with any
-  * cache size (it keys the cache on the compiling thread's class loader
-  * as well as the source; about one warm run in three re-compiles the
-  * same two classes) does not.
+  * above zero, while an occasional run-to-run miss (Spark keys the cache
+  * on the compiling thread's class loader as well as the source) does
+  * not. The one such miss seen, two classes re-compiled in about one
+  * warm run in three, was in the DataFrame form of PageRank's iteration
+  * (its dangling-mass aggregate and rank-join stages); the RDD iteration
+  * generates neither, and ten warm runs in a row compiled 0 classes.
   */
 class CodegenCacheSpec extends SparkTestBase {
   test("a warm q_pagerank run compiles no generated class") {

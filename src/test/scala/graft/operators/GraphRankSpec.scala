@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** PageRank semantics on graphs whose stationary behavior is known in
   * closed form — the oracle checks the corpus instantiation; these pin
@@ -188,5 +190,138 @@ class GraphRankSpec extends SparkTestBase {
     assert(spark.catalog.tableExists(s"${prefix}_labels") &&
       spark.catalog.tableExists(s"${prefix}_edges"),
       "the community state must be landed as catalog tables")
+  }
+
+  // ---- the co-partitioned RDD kernels against the DataFrame recurrence ----
+
+  /** The DataFrame form of [[GraphRank.pageRank]] the RDD kernel
+    * replaced, kept verbatim (minus the plan-audit switch) as the
+    * reference the kernel must equal bit-for-bit. */
+  private def refPageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
+      damping: Double = 0.85): DataFrame = {
+    val n = vertices.count()
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val e = edges.join(deg, Seq("src"))
+      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val srcSet = e.select(col("src").as("vec_id")).distinct().localCheckpoint()
+    var ranks = vertices.select(col("vec_id"), lit(1.0 / n).as("rank"))
+    for (_ <- 1 to iters) {
+      val dang = ranks.join(srcSet, Seq("vec_id"), "left_anti")
+        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
+      val contribs = e
+        .join(ranks.withColumnRenamed("vec_id", "src"), Seq("src"))
+        .groupBy(col("dst"))
+        .agg(sum(col("w") * col("rank")).as("contrib"))
+      ranks = vertices.select(col("vec_id"))
+        .join(contribs.withColumnRenamed("dst", "vec_id"),
+          Seq("vec_id"), "left_outer")
+        .crossJoin(broadcast(dang))
+        .select(col("vec_id"),
+          (lit((1.0 - damping) / n) + lit(damping) *
+            (coalesce(col("contrib"), lit(0.0)) +
+              col("dmass") / lit(n.toDouble))).as("rank"))
+        .localCheckpoint()
+    }
+    val out = ranks.select(col("vec_id"), round(col("rank"), 9).as("rank"))
+    e.unpersist()
+    out
+  }
+
+  /** The DataFrame form of [[GraphRank.labelPropagation]] the RDD kernel
+    * replaced (see [[refPageRank]]). */
+  private def refLabelPropagation(vertices: DataFrame, edges: DataFrame,
+      iters: Int): DataFrame = {
+    val und = edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .repartition(col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels = vertices.select(col("vec_id"), col("vec_id").as("label"))
+    for (_ <- 1 to iters) {
+      val votes = und
+        .join(labels.withColumnRenamed("vec_id", "dst"), Seq("dst"))
+        .select(col("src").as("vec_id"), col("label"))
+        .unionByName(labels)
+        .groupBy(col("vec_id"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+      labels = votes
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("vec_id"))
+            .orderBy(col("cnt").desc, col("label").asc)))
+        .filter(col("rn") === 1)
+        .select(col("vec_id"), col("label"))
+        .localCheckpoint()
+    }
+    val out = labels.select(col("vec_id"), col("label").as("community"))
+    und.unpersist()
+    out
+  }
+
+  /** Rows with the second column as raw bits, sorted (duplicates kept). */
+  private def exactRows(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.get(1) match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case l: Long => l
+    })).sorted
+
+  /** A seeded graph over vertices 0 until n with every awkward shape in
+    * it: dangling and isolated vertices (ids ≥ n/2 get no out-edges),
+    * duplicate edges, self-loops, mutual edges, and endpoints outside
+    * the vertex set on both sides (ids −2, −1, n, n + 1). */
+  private def awkwardGraph(seed: Int, n: Int): DataFrame = {
+    val rng = new scala.util.Random(seed)
+    def id(): Long = rng.nextInt(n + 4).toLong - 2
+    val random = Seq.fill(3 * n)((rng.nextInt(n / 2).toLong, id()))
+    val shaped = Seq((1L, 1L), (2L, 3L), (2L, 3L), (3L, 2L),
+      (-1L, 4L), (4L, n.toLong), (5L, n + 1L))
+    (random ++ shaped ++ random.take(n / 4)).toDF("src", "dst")
+  }
+
+  test("RDD pageRank equals the DataFrame recurrence bit-for-bit on awkward graphs") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for ((edges, n) <- Seq((awkwardGraph(1, 40), 40), (awkwardGraph(2, 200), 200),
+        (empty, 7)); iters <- Seq(0, 1, 5)) {
+      val got = GraphRank.pageRank(verts(n), edges, iters)
+      val want = refPageRank(verts(n), edges, iters)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)))
+      assert(exactRows(got) == exactRows(want), s"n=$n iters=$iters")
+    }
+  }
+
+  test("RDD labelPropagation equals the DataFrame recurrence on awkward graphs") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    // mutual edges only: each pair votes once per direction
+    val mutual = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (2L, 2L))
+      .toDF("src", "dst")
+    for ((edges, n) <- Seq((awkwardGraph(3, 40), 40), (awkwardGraph(4, 200), 200),
+        (mutual, 4), (empty, 7)); iters <- Seq(0, 1, 5)) {
+      val got = GraphRank.labelPropagation(verts(n), edges, iters)
+      val want = refLabelPropagation(verts(n), edges, iters)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)))
+      assert(exactRows(got) == exactRows(want), s"n=$n iters=$iters")
+    }
+  }
+
+  test("both kernels give identical rows whatever the edge input's partition count") {
+    val edges = awkwardGraph(5, 300)
+    def split(k: Int) = edges.repartition(k).localCheckpoint()
+    val pr = Seq(1, 3, 7).map(k => exactRows(GraphRank.pageRank(verts(300), split(k))))
+    val lpa = Seq(1, 3, 7).map(k =>
+      exactRows(GraphRank.labelPropagation(verts(300), split(k))))
+    assert(pr.distinct.size == 1 && lpa.distinct.size == 1)
+  }
+
+  test("one job per iteration: pageRank and labelPropagation start at most iters + 2") {
+    val edges = awkwardGraph(6, 500).localCheckpoint()
+    val iters = 5
+    val (_, pr) = jobsDuring(spark)(GraphRank.pageRank(verts(500), edges, iters).collect())
+    val (_, lpa) = jobsDuring(spark)(
+      GraphRank.labelPropagation(verts(500), edges, iters).collect())
+    assert(pr <= iters + 2, s"pageRank started $pr jobs")
+    assert(lpa <= iters + 2, s"labelPropagation started $lpa jobs")
   }
 }

@@ -767,6 +767,19 @@ class SimilaritySpec extends SparkTestBase {
     assert(Similarity.FlatTrainerMaxSeeds == 4096L)
   }
 
+  test("kmeansCentroidsAuto's flat dispatch is one bounded read: the plain flat trainer's jobs") {
+    // the dispatch's bounded read also fetches the flat path's seeds, so
+    // the flat dispatch starts exactly the jobs of kmeansCentroids (its
+    // one seed collect + the same Lloyd's rounds); pinning the seed frame
+    // before that read cost one job more
+    val emb = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+    val (auto, autoJobs) = jobsDuring(spark)(Similarity.kmeansCentroidsAuto(emb).collect())
+    val (flat, flatJobs) = jobsDuring(spark)(Similarity.kmeansCentroids(emb).collect())
+    assert(auto.toSeq == flat.toSeq, "sf0.001 dispatches to the flat recurrence")
+    assert(autoJobs == flatJobs, s"flat dispatch started $autoJobs jobs, kmeansCentroids $flatJobs")
+  }
+
   test("ensureHierIndex: the landed index equals a fresh hierIndex computation") {
     // the landed ≡ trained law for the round-14 index artifact: landing
     // through parquet and reloading must change neither the live coarse
